@@ -111,21 +111,6 @@ def ordered_fold_general(df: DataFrame, key: str, order: str, ts: str, value: st
     return df.groupBy(key).applyInPandas(fold, schema=out_schema)
 
 
-def _column_exists(df: DataFrame, name: str) -> bool:
-    """Does ``name`` resolve to a column of ``df`` under the SESSION's
-    resolution rules? Case-insensitive by default, exact when
-    spark.sql.caseSensitive=true — a lowered-set check alone would
-    accept 'ID' for column 'id' in a case-sensitive session where the
-    resolver rejects it (round-12 review pass 3)."""
-    sensitive = (
-        df.sparkSession.conf.get("spark.sql.caseSensitive", "false")
-        or "false"
-    ).lower() == "true"
-    if sensitive:
-        return name in df.columns
-    return name.lower() in {c.lower() for c in df.columns}
-
-
 def arg_min(df: DataFrame, key: str, value: str, tiebreak: str, keep: list[str]) -> DataFrame:
     """A3 minBy: per-key row with the minimum ``value``
     (WindowTest.scala:73 ``minBy(1)``).
@@ -186,7 +171,6 @@ def group_quantiles(
     df: DataFrame,
     key: str,
     value: str,
-    tiebreak: str | None = None,
     qs: tuple[float, ...] = (0.5, 0.9, 0.99),
     bin_width: float = 1.0,
 ) -> DataFrame:
@@ -207,28 +191,13 @@ def group_quantiles(
     new shape's only windows run over the bounded per-key histogram.
     The q-quantile VALUE is tiebreak-invariant (every row of the
     matching histogram group shares the value), so results are
-    hash-identical to the row_number oracle.
-
-    .. deprecated:: round 12
-       ``tiebreak`` is DEPRECATED and ignored — the binned-CDF rebuild
-       made the result tiebreak-invariant, so the parameter no longer
-       influences duplicate-value resolution (round-11 ADVICE: the
-       signature must stop implying an ordering contract the
-       implementation does not consume). It is validated when passed
-       (must name an existing column) so stale callers fail loudly
-       rather than believing a bogus column name ordered anything.
+    hash-identical to the row_number oracle and no tiebreak column is
+    needed.
 
     Shape: one hash-agg histogram shuffle (map-side combinable) + two
     bounded-histogram windows + a bounded final agg. The corpus is
     scanned once and never sorted.
     """
-    if tiebreak is not None and not _column_exists(df, tiebreak):
-        raise ValueError(
-            f"group_quantiles: deprecated tiebreak column {tiebreak!r} "
-            f"does not exist in the frame (columns: {df.columns}); the "
-            "parameter is ignored by the binned-CDF implementation — "
-            "drop it"
-        )
     cdf = _quantile_cdf(df, key, value, bin_width)
     aggs = [
         _pick_rank(F.ceil(F.lit(q) * F.col("n")), f"p{int(q * 100)}")
@@ -241,7 +210,6 @@ def group_quantiles_certified(
     df: DataFrame,
     key: str,
     value: str,
-    tiebreak: str | None = None,
     qs: tuple[float, ...] = (0.5, 0.9, 0.99),
     accuracy: int = 1000,
     bin_width: float = 1.0,
@@ -273,16 +241,7 @@ def group_quantiles_certified(
     + one sketch hash-agg (approx branch) + a key-equi join of two
     bounded frames. At true 100 TB one would drop the exact branch and
     keep only the sketch; here the exact branch IS the checker.
-
-    ``tiebreak`` is DEPRECATED and ignored, exactly as in
-    :func:`group_quantiles` — validated-if-passed, never consumed.
     """
-    if tiebreak is not None and not _column_exists(df, tiebreak):
-        raise ValueError(
-            f"group_quantiles_certified: deprecated tiebreak column "
-            f"{tiebreak!r} does not exist in the frame (columns: "
-            f"{df.columns}); the parameter is ignored — drop it"
-        )
     cdf = _quantile_cdf(df, key, value, bin_width)
     slack = F.ceil(F.col("n") / F.lit(accuracy)) + F.lit(1)
     aggs = [F.max("n").alias("n")]

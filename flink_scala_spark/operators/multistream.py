@@ -26,14 +26,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def band_label(value_col: str, low: float, high: float) -> F.Column:
-    """SplitAndSelect.scala:26-33 temperature bands: <low / [low,high) / >=high."""
-    v = F.col(value_col)
-    return (
-        F.when(v < low, F.lit("low")).when(v < high, F.lit("mid")).otherwise(F.lit("high"))
-    ).alias("band")
-
-
 def split_select(df: DataFrame, value_col: str, low: float, high: float) -> dict[str, DataFrame]:
     """M1: one parent plan fanned into labeled sub-frames."""
     v = F.col(value_col)

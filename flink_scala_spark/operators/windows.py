@@ -42,14 +42,6 @@ from pyspark.sql import functions as F
 from flink_scala_spark.functions.portable import epoch_seconds
 
 
-def with_event_time(df: DataFrame, epoch_col: str, unit: str = "seconds") -> DataFrame:
-    """W2's timestamp extractor: epoch long -> TimestampType ``ts``
-    (WindowTest.scala:54-60 multiplies seconds by 1000; we go straight
-    to TimestampType)."""
-    f = F.timestamp_seconds if unit == "seconds" else F.timestamp_millis
-    return df.withColumn("ts", f(F.col(epoch_col)))
-
-
 def tumbling_agg(
     df: DataFrame,
     ts_col: str,

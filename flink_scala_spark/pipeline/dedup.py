@@ -141,20 +141,6 @@ def _shingle_h1_h2(shingle):
     return h, lo, hi
 
 
-def minhash_signatures(shingles: DataFrame, num_hashes: int = NUM_HASHES) -> DataFrame:
-    """One row per doc with ``mh0..mh{S-1}`` minhash values — a single
-    hash-shuffle on doc_id with map-side partial mins, and a single
-    md5 per shingle (``_shingle_h1_h2``)."""
-    _h, lo, hi = _shingle_h1_h2(F.col("shingle"))
-    aggs = [
-        F.min((F.lit(MH_A[s]) * lo + F.lit(MH_B[s]) * hi) % F.lit(MH_MOD)).alias(
-            f"mh{s}"
-        )
-        for s in range(num_hashes)
-    ]
-    return shingles.groupBy("doc_id").agg(*aggs)
-
-
 def doc_profiles(
     docs: DataFrame,
     text_col: str = "text",
@@ -1010,10 +996,18 @@ def near_dup_clusters_star(
 def minhash_shingle_hashes(text_col: str = "text"):
     """ROW-LOCAL distinct-trigram 60-bit hash array (the ``hs`` stage
     of the streaming MinHash signature): distinct word trigrams ->
-    md5-prefix hash, NULL when the doc has fewer than 3 words. Split
-    out of :func:`minhash_signature_exprs` (round 13) so callers can
-    materialize it in its OWN projection — see that function's
-    docstring for why."""
+    md5-prefix hash, NULL when the doc has fewer than 3 words (NULL
+    signatures, mirroring their absence from the batch/oracle
+    signature sets).
+
+    Project it in its OWN select, then apply
+    :func:`minhash_exprs_over_hashes`: higher-order functions run
+    interpreted with no common-subexpression elimination, so inlining
+    this subtree into each of the 8 minhash columns re-hashes every
+    shingle 8x and carries an 8x plan tree, which a streaming query
+    re-analyzes every microbatch (CollapseProject keeps the two
+    projections apart — the shared array is non-cheap and referenced
+    8x)."""
     w = F.split(F.col(text_col), " ")
     n_sh = F.greatest(F.size(w) - 2, F.lit(0))
     shingles = F.when(
@@ -1056,46 +1050,6 @@ def minhash_exprs_over_hashes(hs_col: str) -> list:
         F.array_min(F.transform(F.col(hs_col), _mh_lambda(s))).alias(f"mh{s}")
         for s in range(NUM_HASHES)
     ]
-
-
-def minhash_signature_exprs(text_col: str = "text") -> list:
-    """ROW-LOCAL MinHash signature columns mh0..mh{NUM_HASHES-1} —
-    the streaming-friendly twin of :func:`minhash_signatures`.
-
-    The batch path explodes shingles and groupBy-mins them (right at
-    corpus scale: map-side combine); a stream wants the signature
-    before any shuffle, so here the same arithmetic — distinct word
-    trigrams -> 60-bit md5-prefix hash -> (A_s*lo + B_s*hi) mod
-    (2^61-1), min over shingles — runs as pure array expressions,
-    one row at a time. Docs with fewer than 3 words (no shingles)
-    yield NULL signatures, mirroring their absence from the exploded
-    batch/oracle signature sets.
-
-    PLAN-SIZE WARNING (round 13): each of the 8 columns returned here
-    embeds the FULL shingle+md5 subtree — higher-order functions run
-    interpreted with no common-subexpression elimination, so a single
-    select of these re-hashes every shingle 8x and carries an 8x
-    plan tree (which a streaming query re-analyzes EVERY microbatch).
-    Streaming consumers should project :func:`minhash_shingle_hashes`
-    in its own select first and then apply
-    :func:`minhash_exprs_over_hashes` (CollapseProject keeps the two
-    projections apart — the shared array is non-cheap and referenced
-    8x). This composed form is kept for single-shot batch callers and
-    as the oracle-shape anchor."""
-    hs = minhash_shingle_hashes(text_col)
-    mask = F.lit((1 << 30) - 1)
-
-    def _mh_lambda(s):
-        a, b = F.lit(MH_A[s]), F.lit(MH_B[s])
-        return lambda x: (a * x.bitwiseAND(mask) + b * F.shiftright(x, 30)) % F.lit(
-            MH_MOD
-        )
-
-    cols = []
-    for s in range(NUM_HASHES):
-        mh = F.array_min(F.transform(hs, _mh_lambda(s)))
-        cols.append(mh.alias(f"mh{s}"))
-    return cols
 
 
 STITCH_K = 8  # words shared across a stitch boundary

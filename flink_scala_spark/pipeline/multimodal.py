@@ -16,7 +16,6 @@ upstream scan gives (no shuffle introduced); batch size is bounded by
 
 from __future__ import annotations
 
-import hashlib
 from typing import Iterator
 
 import pandas as pd
@@ -68,18 +67,6 @@ def decode_image(payload: bytes):
             "image decode requires pillow; this container tests the Spark "
             "plumbing with extract_features' deterministic fake decoder"
         ) from e
-
-
-def _fake_decode(payload: bytes) -> tuple[int, str, int, int]:
-    """Deterministic stand-in for a decoder: byte length, 4-byte header
-    hex, and md5-derived fake dimensions (reproducible in SQL)."""
-    h = int(hashlib.md5(payload).hexdigest()[:15], 16)
-    return (
-        len(payload),
-        payload[:4].hex().upper(),
-        320 + h % 1600,
-        240 + (h >> 20) % 840,
-    )
 
 
 def sample_frames(assets: DataFrame, every_n: int = 7) -> DataFrame:

@@ -1,30 +1,31 @@
 """Similarity search over embedding columns (array<float>).
 
-- Brute-force cosine top-k: the exactness baseline. Query set is
-  broadcast; candidates stream through a nested-loop join.
+- Brute-force cosine top-k: the exactness baseline. Query matrix is
+  broadcast; candidates stream through Arrow batches.
 - Random-hyperplane LSH bucketing: the 100 TB path. Each vector gets
   an 8-bit bucket from the signs of 8 hyperplane projections; pairs
-  are only compared within a bucket (equi-join shuffle on the bucket
-  id), cutting the pair space ~256x. Hyperplane components are fixed
+  are only compared within a bucket (one shuffle on the bucket id),
+  cutting the pair space ~256x. Hyperplane components are fixed
   Python-computed constants baked into the plan, so the DuckDB oracle
   replays the identical bucketing.
 - Brute-force near-dup pairs: ground truth for the bucketed variant.
 
-Physical layout: vectors are **flattened to DIM plain double columns**
-before any pair join. A single unrolled ``element_at`` dot product
-compiles to >64 KB of JVM bytecode inside a pair-join stage, which
-fails Janino compilation and silently drops the whole stage to
-interpreted evaluation (~15x slower measured on the 2M-pair stage).
-Over flat columns the same in-order sum is a short chain of column
-multiply-adds — small bytecode, stays in whole-stage codegen, and the
-per-vector flattening cost is O(N), not O(N^2). The fold order (0.0 +
-e1*f1 + e2*f2 + ...) is identical, so cosines stay bit-for-bit equal
-to the DuckDB in-order ``list_reduce`` oracle.
+Physical layout: the JVM-side scoring paths (IVF, PQ rerank) flatten
+vectors to **DIM plain double columns** before any pair join. A single
+unrolled ``element_at`` dot product compiles to >64 KB of JVM bytecode
+inside a pair-join stage, which fails Janino compilation and silently
+drops the whole stage to interpreted evaluation (~15x slower measured
+on the 2M-pair stage). Over flat columns the same in-order sum is a
+short chain of column multiply-adds — small bytecode, stays in
+whole-stage codegen, and the per-vector flattening cost is O(N), not
+O(N^2). The fold order (0.0 + e1*f1 + e2*f2 + ...) is identical, so
+cosines stay bit-for-bit equal to the DuckDB in-order ``list_reduce``
+oracle.
 
-Pair-producing joins repartition the streamed side first: the test
-parquet arrives as one file -> one partition, and a broadcast join
-inherits that parallelism (single-threaded scoring). On a cluster the
-same call spreads the quadratic stage across all cores.
+Scoring passes spread the streamed side first (``tables.spread``): the
+test parquet arrives as one file -> one partition, and a broadcast join
+or mapInPandas inherits that parallelism (single-threaded scoring). On
+a cluster the scan already has enough splits and nothing is shuffled.
 """
 
 from __future__ import annotations
@@ -35,6 +36,7 @@ import os
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from flink_scala_spark.materialize import shared_bounded
+from flink_scala_spark.tables import spread
 
 NUM_PLANES = 8
 DIM = 64
@@ -53,35 +55,6 @@ def _current_entry_or(fallback: str) -> str:
     from flink_scala_spark.queries import catalog
 
     return catalog.current_query() or fallback
-
-
-def _default_parts(df: DataFrame) -> int:
-    return df.sparkSession.sparkContext.defaultParallelism
-
-
-def _spread(df: DataFrame) -> DataFrame:
-    """Ensure scoring parallelism WITHOUT an unconditional shuffle.
-
-    Locally the test parquet arrives as one file -> one partition, and
-    a mapInPandas (or broadcast join) inherits that parallelism, so we
-    round-robin repartition. On a cluster the scan already has
-    thousands of splits — repartitioning there would shuffle the whole
-    table for nothing, so leave it alone.
-
-    The probe reads file-listing METADATA only (``inputFiles``) — the
-    previous ``df.rdd.getNumPartitions()`` forced the plan through the
-    Python-RDD conversion just to count partitions. A non-file source
-    reports zero files and conservatively repartitions (cheap when it
-    was already parallel, correct when it was not).
-    """
-    target = _default_parts(df)
-    try:
-        n_files = len(df.inputFiles())
-    except Exception:
-        n_files = 0
-    if n_files >= target:
-        return df
-    return df.repartition(target)
 
 
 def flatten(
@@ -213,36 +186,6 @@ def _flat_cosine(pa: str, pb: str, dim: int = DIM) -> Column:
     return _flat_dot(pa, pb, dim) / F.sqrt(F.col(f"{pa}nsq") * F.col(f"{pb}nsq"))
 
 
-def cosine_topk(
-    emb: DataFrame,
-    query_pred,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Exact top-k cosine neighbors for the query subset.
-
-    The query side is broadcast (small by construction); ranking is a
-    per-query window — the shuffle is keyed by query id only.
-    """
-    q = flatten(emb.where(query_pred), "q", "query_id", id_col, vec_col)
-    c = _spread(flatten(emb, "c", "neighbor_id", id_col, vec_col))
-    pairs = c.crossJoin(F.broadcast(q)).where(
-        F.col("neighbor_id") != F.col("query_id")
-    )
-    scored = pairs.select(
-        "query_id", "neighbor_id", _flat_cosine("q", "c").alias("cosine")
-    )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
-
-
 def cosine_topk_vectorized(
     emb: DataFrame,
     query_pred,
@@ -257,7 +200,7 @@ def cosine_topk_vectorized(
     k_same: int | None = None,
 ) -> DataFrame:
     """Exact top-k cosine neighbors, Arrow+numpy path — bit-identical
-    to :func:`cosine_topk`.
+    to the DuckDB oracle's in-order ``list_reduce`` fold.
 
     The query matrix is broadcast; each Arrow batch scores a
     (batch x queries) block with per-dimension accumulation (the
@@ -415,7 +358,7 @@ def cosine_topk_vectorized(
         out["rank"] = _np.arange(1, len(order) + 1, dtype="int32")
         return _pd.DataFrame(out)
 
-    src = _spread(emb.select(*q_cols))
+    src = spread(emb.select(*q_cols))
     if both:
         partial = src.mapInPandas(
             local_topk,
@@ -434,24 +377,6 @@ def cosine_topk_vectorized(
     )
 
 
-def _baseline_near_dup_pairs(
-    emb: DataFrame,
-    threshold: float,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Brute-force all-pairs cosine filter — TEST-ONLY exact baseline
-    (underscore-namespaced so no caller mistakes it for a production
-    path; its broadcast of one full side cannot scale). The catalog
-    routes to :func:`near_dup_pairs_blocked`."""
-    a = _spread(flatten(emb, "a", "vec_a", id_col, vec_col))
-    b = flatten(emb, "b", "vec_b", id_col, vec_col)
-    pairs = a.join(F.broadcast(b), F.col("vec_a") < F.col("vec_b"))
-    return pairs.select(
-        "vec_a", "vec_b", _flat_cosine("a", "b").alias("cosine")
-    ).where(F.col("cosine") >= threshold)
-
-
 def _baseline_near_dup_pairs_vectorized(
     emb: DataFrame,
     threshold: float,
@@ -459,8 +384,8 @@ def _baseline_near_dup_pairs_vectorized(
     vec_col: str = "embedding",
     dim: int = DIM,
 ) -> DataFrame:
-    """Brute-force all-pairs cosine, Arrow+numpy path: bit-identical to
-    :func:`_baseline_near_dup_pairs` and ~10x faster on the quadratic stage.
+    """Brute-force all-pairs cosine, Arrow+numpy path: the TEST-ONLY
+    exact baseline, bit-identical to the DuckDB oracle's in-order fold.
 
     One side is broadcast as a dense float64 matrix (same must-fit
     memory contract as the broadcast join); the streamed side crosses
@@ -520,7 +445,7 @@ def _baseline_near_dup_pairs_vectorized(
                 }
             )
 
-    out = _spread(emb.select(id_col, vec_col))
+    out = spread(emb.select(id_col, vec_col))
     return out.mapInPandas(fn, "vec_a long, vec_b long, cosine double")
 
 
@@ -808,7 +733,7 @@ def trained_centroids(
     _require_centroids(cent_ids, "trained_centroids")
     d = int(dim)
     sc = emb.sparkSession.sparkContext
-    src = _spread(emb.select(id_col, vec_col))
+    src = spread(emb.select(id_col, vec_col))
     for _ in range(int(iters)):
         c_nsq = _nsq_rows(C, d)
         bc = sc.broadcast((cent_ids, C, c_nsq))
@@ -881,7 +806,7 @@ def ivf_assign(
     |input| x |centroids| row-local arithmetic plus one map-side-
     combined max_by shuffle, so assigning a DELTA costs |delta|, never
     a corpus rescan. Returns (vec_id, centroid_id)."""
-    base = _spread(flatten(emb, "c", "nid", id_col, vec_col))
+    base = spread(flatten(emb, "c", "nid", id_col, vec_col))
     return (
         base.crossJoin(F.broadcast(cent_flat))
         .select("nid", "centroid_id", _flat_cosine("c", "t").alias("sim"))
@@ -921,7 +846,7 @@ def ivf_topk(
     """
     cent = flatten(centroid_rows(emb, num_centroids, id_col, vec_col),
                    "t", "centroid_id", id_col, vec_col)
-    base = _spread(flatten(emb, "c", "neighbor_id", id_col, vec_col))
+    base = spread(flatten(emb, "c", "neighbor_id", id_col, vec_col))
     vec_cols = [f"c{i}" for i in range(1, DIM + 1)] + ["cnsq"]
     # index build: nearest centroid per vector; max_by over
     # (sim, -centroid_id) == "highest sim, lowest centroid id on ties".
@@ -1139,7 +1064,7 @@ def ivf_topk_vectorized(
             }
         )
 
-    src = _spread(emb.select(*q_sel))
+    src = spread(emb.select(*q_sel))
     assign_schema = f"neighbor_id long, {vec_col} array<float>, centroid_id long"
     if use_labels:
         assign_schema += f", {label_col} long"
@@ -1252,25 +1177,8 @@ def max_cosine_vs_reference(
                 }
             )
 
-    src = _spread(corpus.select(id_col, vec_col))
+    src = spread(corpus.select(id_col, vec_col))
     return src.mapInPandas(score, out_schema)
-
-
-def lsh_near_dup_pairs(
-    emb: DataFrame,
-    threshold: float,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Bucketed near-dup: pairs are compared only inside an LSH bucket
-    (equi-join on bucket id -> shuffle/broadcast partitioned by bucket;
-    the quadratic blowup is bounded per-bucket)."""
-    a = _spread(with_bucket(flatten(emb, "a", "vec_a", id_col, vec_col), "a"))
-    b = with_bucket(flatten(emb, "b", "vec_b", id_col, vec_col), "b")
-    pairs = a.join(b, "bucket").where(F.col("vec_a") < F.col("vec_b"))
-    return pairs.select(
-        "vec_a", "vec_b", _flat_cosine("a", "b").alias("cosine")
-    ).where(F.col("cosine") >= threshold)
 
 
 def lsh_near_dup_pairs_vectorized(
@@ -1280,9 +1188,9 @@ def lsh_near_dup_pairs_vectorized(
     vec_col: str = "embedding",
     dim: int = DIM,
 ) -> DataFrame:
-    """LSH-bucketed near-dup, Arrow+numpy path: bit-identical to
-    :func:`lsh_near_dup_pairs`, without the 130-column pair join or the
-    512-term codegen projections.
+    """LSH-bucketed near-dup, Arrow+numpy path: bit-identical to the
+    DuckDB oracle's SQL bucketing and in-order cosine fold, without a
+    130-column pair join or 512-term codegen projections.
 
     Stage 1 (``mapInPandas``): each vector's 8 hyperplane projections
     and its bucket id, accumulated per-dimension in index order — the
@@ -1352,7 +1260,7 @@ def lsh_near_dup_pairs_vectorized(
             {"vec_a": ids[ii], "vec_b": ids[jj], "cosine": cos[ii, jj]}
         )
 
-    src = _spread(emb.select(id_col, vec_col))
+    src = spread(emb.select(id_col, vec_col))
     bucketed = src.mapInPandas(
         assign, f"{id_col} long, {vec_col} array<float>, bucket int"
     )
@@ -1435,7 +1343,7 @@ def pq_encode(emb, cbflat, id_col: str = "vec_id", vec_col: str = "embedding"):
     """Corpus -> PQ codes (nid, code0..codeM-1): one broadcast cross
     join against the 16 codebook rows, argmins collapsed into a single
     map-side-combinable groupBy."""
-    base = _spread(flatten(emb, "e", "nid", id_col, vec_col))
+    base = spread(flatten(emb, "e", "nid", id_col, vec_col))
     pair = base.crossJoin(F.broadcast(cbflat))
     enc_d = pair.select(
         "nid",
@@ -1957,7 +1865,7 @@ def pq_refined_topk(
     the flattened query vectors broadcast into ONE hash join against
     the corpus scan — the corpus is never shuffled; the only exchange
     is the per-query final top-k. Rerank scoring is the same in-order
-    fold as :func:`cosine_topk`, so ranks replay exactly in SQL."""
+    fold as :func:`_flat_cosine`, so ranks replay exactly in SQL."""
     from pyspark.sql import Window
 
     cand = pq_topk(emb, query_pred, k=coarse_k, id_col=id_col, vec_col=vec_col)
@@ -1965,7 +1873,7 @@ def pq_refined_topk(
     cq = cand.select("query_id", "neighbor_id").join(
         F.broadcast(q), F.col("query_id") == F.col("qid")
     ).drop("qid")
-    c = _spread(flatten(emb, "c", "cid", id_col, vec_col))
+    c = spread(flatten(emb, "c", "cid", id_col, vec_col))
     pairs = c.join(F.broadcast(cq), F.col("cid") == F.col("neighbor_id"))
     scored = pairs.select(
         "query_id", "neighbor_id", _flat_cosine("q", "c").alias("cosine")
@@ -2058,7 +1966,7 @@ def ivf_pq_refined_topk(
                 out_c.extend(ids_c[order])
             yield _pd.DataFrame({"query_id": out_q, "centroid_id": out_c})
 
-    src = _spread(emb.select(id_col, vec_col))
+    src = spread(emb.select(id_col, vec_col))
     asg = src.mapInPandas(assign_cells, "nid long, centroid_id long")
     probes = (
         emb.where(query_pred)
@@ -2095,7 +2003,7 @@ def ivf_pq_refined_topk(
     cq = coarse.join(F.broadcast(qf), F.col("query_id") == F.col("qid")).drop(
         "qid"
     )
-    c = _spread(flatten(emb, "c", "cid", id_col, vec_col))
+    c = spread(flatten(emb, "c", "cid", id_col, vec_col))
     pairs = c.join(F.broadcast(cq), F.col("cid") == F.col("neighbor_id"))
     ref = pairs.select(
         "query_id", "neighbor_id", _flat_cosine("q", "c").alias("cosine")
@@ -2168,8 +2076,6 @@ def quantize_int8(emb: DataFrame, id_col: str = "vec_id", vec_col: str = "embedd
     (tables.spread — no-op on multi-split cluster inputs): the per-dim
     interpreted array math ran on ONE local task (round-13 A/B at
     sf0.1: 2.52 -> 0.35 s noop)."""
-    from flink_scala_spark.tables import spread
-
     emb = spread(emb)
     v = F.transform(F.col(vec_col), lambda x: x.cast("double"))
     max_abs = F.array_max(F.transform(v, lambda x: F.abs(x)))

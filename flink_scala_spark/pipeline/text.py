@@ -10,7 +10,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from flink_scala_spark.materialize import shared_bounded
+from flink_scala_spark.materialize import loop_checkpoint_lazy, shared_bounded
 
 # Tiny per-language stopword profiles for the n-gram-free heuristic
 # language identifier. Ties resolve in declaration order.
@@ -687,8 +687,12 @@ def _bpe_train_loop(wf, iters: int, carry: tuple[str, ...]):
     is COLLECTED per iteration and re-enters the fold as literals, so
     each iteration is exactly one job over the shared vocabulary RDD
     and the corpus is scanned once, in the initial word-frequency agg.
+    The vocabulary is LOOP state, so it goes through
+    ``loop_checkpoint_lazy`` (lineage cut in every mode), never
+    ``shared_bounded`` (whose persist mode would keep the lineage and
+    grow the plan per iteration).
     """
-    wf = wf.transform(shared_bounded)
+    wf = wf.transform(loop_checkpoint_lazy)
     merges: list[tuple[int, str, str, int]] = []
     for it in range(1, iters + 1):
         # sequence(1, 0) DESCENDS in Spark (same trap as fingerprint):
@@ -729,7 +733,7 @@ def _bpe_train_loop(wf, iters: int, carry: tuple[str, ...]):
             _bpe_merge_fold(
                 F.col("syms"), F.lit(row["pair_a"]), F.lit(row["pair_b"])
             ).alias("syms"),
-        ).transform(shared_bounded)
+        ).transform(loop_checkpoint_lazy)
     return wf, merges
 
 

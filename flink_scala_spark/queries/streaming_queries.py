@@ -1945,13 +1945,14 @@ def q_streaming_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """NEAR-duplicate detection as a live stateful stream — the
     production ingest shape: documents arrive over 8 ascending-id
     microbatches, each computes its MinHash signature ROW-LOCALLY
-    (dedup.minhash_signature_exprs — no shuffle before the band key),
-    and per-LSH-bucket keyed state holds the signatures seen so far;
-    a doc agreeing with an EARLIER doc on >= 6 of 8 minhashes is
-    flagged with its sources. Pigeonhole makes bucket-local checking
-    lossless at this threshold (>= 6 matches forces at least one
-    fully-equal band). Complements `streaming_dedup_events` (exact
-    keys) and the batch `dedup_minhash_lsh` (whole-corpus pairs); the
+    (dedup.minhash_shingle_hashes + minhash_exprs_over_hashes — no
+    shuffle before the band key), and per-LSH-bucket keyed state holds
+    the signatures seen so far; a doc agreeing with an EARLIER doc on
+    >= 6 of 8 minhashes is flagged with its sources. Pigeonhole makes
+    bucket-local checking lossless at this threshold (>= 6 matches
+    forces at least one fully-equal band). Complements
+    `streaming_dedup_events` (exact keys) and the batch
+    `dedup_minhash_lsh` (whole-corpus pairs); the
     oracle runs the identical signature/band arithmetic with
     'earlier' = smaller doc_id, which the id-bucket replay contract
     guarantees. Retention is UNBOUNDED by design (dedup against
@@ -2108,6 +2109,13 @@ def q_streaming_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
 # against a STATIC PQ index (X96's machinery behind a live endpoint)
 # ---------------------------------------------------------------------------
 
+#: Requests one serving microbatch may carry: ``serve`` collects the
+#: batch's query vectors to the driver to build its ADC tables, so the
+#: collect is capped here and a larger batch fails loudly instead of
+#: filling the driver heap.
+MAX_SERVE_BATCH_ROWS = 10_000
+
+
 @register(
     "streaming_ann_pq_serving",
     _Q["ann_pq_topk"].oracle,
@@ -2181,9 +2189,20 @@ def q_streaming_ann_pq_serving(spark: SparkSession, sf_dir: str) -> DataFrame:
 
         def serve(batch_df, _bid):
             # one job: the batch's request payload (bounded) -> driver
-            rows = batch_df.select("vec_id", "embedding").collect()
+            rows = (
+                batch_df.select("vec_id", "embedding")
+                .limit(MAX_SERVE_BATCH_ROWS + 1)
+                .collect()
+            )
             if not rows:
                 return
+            if len(rows) > MAX_SERVE_BATCH_ROWS:
+                raise RuntimeError(
+                    f"streaming_ann_pq_serving: a serving microbatch holds "
+                    f"more than {MAX_SERVE_BATCH_ROWS:,} requests, past the "
+                    "bound for driver-built ADC tables. Replay the requests "
+                    "in smaller batches."
+                )
             qdt = spark.createDataFrame(
                 similarity.pq_query_tables_rows(
                     [(r[0], r[1]) for r in rows], cb_py

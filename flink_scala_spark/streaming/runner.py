@@ -142,24 +142,18 @@ class _replay_sized_partitions:
                 pass
         return False
 
-#: Executed physical plan of the most recent bounded run (and a bounded
-#: history by query name) — captured so tests can pin streaming plan
+#: Executed physical plan of each query's most recent bounded run, by
+#: query name — captured so tests can pin streaming plan
 #: shapes (state-store operator counts, join strategies) without
 #: re-running the query. The streaming executedPlan only exists on a
 #: LIVE query object, so this capture is the one chance to see it.
 LAST_PLANS: dict[str, str] = {}
-_LAST: list[str] = []
 
 #: Accumulated replay statistics per catalog query name — input rows
 #: and microbatch counts summed over every bounded run a catalog entry
 #: performs (some entries drive several). bench_streaming.py clears
 #: this between queries to compute replay throughput (rows/s).
 REPLAY_STATS: dict[str, dict[str, int]] = {}
-
-
-def last_plan() -> str:
-    """Physical plan of the most recently completed bounded run."""
-    return _LAST[-1] if _LAST else ""
 
 
 def _capture_plan(q, name: str) -> None:
@@ -178,8 +172,6 @@ def _capture_plan(q, name: str) -> None:
     except Exception:
         return
     LAST_PLANS[key] = plan
-    _LAST.append(plan)
-    del _LAST[:-1]
 
 
 def _widen_progress_buffer(spark) -> None:

@@ -26,12 +26,6 @@ TABLES = (
     "embeddings",
 )
 
-DEFAULT_SF_DIR = "/root/testdata/sf0.001"
-
-
-def sf_dir_from_env(default: str = DEFAULT_SF_DIR) -> str:
-    return os.environ.get("SPARK_GRAFT_SF_DIR", default)
-
 
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLES:
@@ -54,38 +48,33 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 def spread(df: DataFrame) -> DataFrame:
     """Ensure a heavy ROW-LOCAL pass gets scan parallelism WITHOUT an
-    unconditional shuffle (the round-12 ``similarity._spread`` idiom,
-    promoted here in round 13 because it applies far beyond pair
-    joins).
+    unconditional shuffle — the engine's one scan-parallelism helper.
 
     The testdata tables are ONE parquet file with ONE row group each,
     so every scan stage is a single task locally no matter what
     ``maxPartitionBytes`` says — a projection that does real per-row
-    work (per-k-gram hashing, per-dim array math) then runs on one
-    core of local[32]. The probe reads file-listing METADATA only
+    work (per-k-gram hashing, per-dim array math, Arrow scoring) then
+    runs on one core. The probe reads file-listing METADATA only
     (``inputFiles``): when the scan already has at least as many
     splits as the session's parallelism — every real cluster corpus —
     this is a no-op and nothing is shuffled; only a
     fewer-files-than-cores input pays one round-robin exchange to
-    unlock the cores. Apply it ONLY where the per-row work measurably
-    dominates that exchange (each call site cites its A/B); cheap
-    scan→agg paths keep the plain scan.
+    unlock the cores. Fail-open: a session or plan that cannot be
+    probed (Connect-style session, ``inputFiles`` raising) or a frame
+    with no files behind it (in-memory, checkpointed, streaming batch)
+    comes back unchanged — its parallelism is unknown, and guessing
+    would add a full shuffle. Apply it ONLY where the per-row work
+    measurably dominates that exchange (each call site cites its A/B);
+    cheap scan->agg paths keep the plain scan.
     """
     try:
         target = df.sparkSession.sparkContext.defaultParallelism
-    except Exception:
-        return df  # Connect-style session: cannot probe, do not guess
-    try:
         n_files = len(df.inputFiles())
     except Exception:
-        n_files = 0
-    if n_files >= target:
+        return df
+    if n_files == 0 or n_files >= target:
         return df
     return df.repartition(target)
-
-
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load(spark, sf_dir, name) for name in TABLES}
 
 
 def register_views(spark: SparkSession, sf_dir: str) -> None:

@@ -16,8 +16,7 @@ SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 def spark():
     from flink_scala_spark.session import get_spark
 
-    s = get_spark("tests", cpus=int(os.environ.get("SPARK_GRAFT_TEST_CPUS", "8")))
-    yield s
+    yield get_spark("tests")
 
 
 @pytest.fixture(scope="session")

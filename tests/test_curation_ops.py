@@ -99,37 +99,13 @@ def test_group_quantiles_exact_rank_selection(spark):
         ("b", 10.0, 100)
     ]
     df = spark.createDataFrame(rows, "k string, v double, id long")
-    out = {r["k"]: r for r in group_quantiles(df, "k", "v", "id").collect()}
+    out = {r["k"]: r for r in group_quantiles(df, "k", "v").collect()}
     # n=5: p50 -> rank ceil(2.5)=3 -> value 3; p90 -> ceil(4.5)=5 -> 5; p99 -> ceil(4.95)=5
     assert out["a"]["n"] == 5
     assert out["a"]["p50"] == 3.0
     assert out["a"]["p90"] == 5.0
     assert out["a"]["p99"] == 5.0
     assert out["b"]["p50"] == 10.0
-
-
-def test_group_quantiles_tiebreak_deprecated_but_validated(spark):
-    """Round-12 ADVICE: tiebreak is ignored by the binned-CDF rebuild,
-    so (a) passing a valid column changes nothing, (b) passing a
-    NONEXISTENT column fails loudly instead of silently implying an
-    ordering contract, (c) omitting it entirely works."""
-    import pytest as _pytest
-
-    from flink_scala_spark.operators.aggregations import (
-        group_quantiles_certified,
-    )
-
-    df = spark.createDataFrame(
-        [("a", float(v), i) for i, v in enumerate([5, 1, 4, 2, 3])],
-        "k string, v double, id long",
-    )
-    no_tb = group_quantiles(df, "k", "v").collect()
-    with_tb = group_quantiles(df, "k", "v", "id").collect()
-    assert no_tb == with_tb
-    with _pytest.raises(ValueError, match="tiebreak"):
-        group_quantiles(df, "k", "v", "no_such_col")
-    with _pytest.raises(ValueError, match="tiebreak"):
-        group_quantiles_certified(df, "k", "v", "no_such_col")
 
 
 def test_streaming_dedup_matches_batch_distinct(spark, sf_dir):
@@ -2175,7 +2151,7 @@ def test_group_quantiles_null_pin(spark):
         [("a", 1.0, 1), ("a", None, 2), ("a", 3.0, 3), ("b", None, 4)],
         "k string, v double, id long",
     )
-    rows = {r["k"]: r for r in group_quantiles(df, "k", "v", "id").collect()}
+    rows = {r["k"]: r for r in group_quantiles(df, "k", "v").collect()}
     assert set(rows) == {"a"}  # all-NULL key b is absent, both engines
     assert rows["a"]["n"] == 2  # NULLs don't count
     assert rows["a"]["p50"] == 1.0 and rows["a"]["p99"] == 3.0
@@ -2196,7 +2172,7 @@ def test_group_quantiles_null_key_group_kept(spark):
          ("a", 5.0, 4), ("a", 7.0, 5)],
         "k string, v double, id long",
     )
-    rows = {r["k"]: r for r in group_quantiles(df, "k", "v", "id").collect()}
+    rows = {r["k"]: r for r in group_quantiles(df, "k", "v").collect()}
     assert set(rows) == {None, "a"}
     assert rows[None]["n"] == 3
     assert rows[None]["p50"] == 2.0 and rows[None]["p99"] == 9.0
@@ -2204,7 +2180,7 @@ def test_group_quantiles_null_key_group_kept(spark):
 
     cert = {
         r["k"]: r
-        for r in group_quantiles_certified(df, "k", "v", "id").collect()
+        for r in group_quantiles_certified(df, "k", "v").collect()
     }
     assert set(cert) == {None, "a"}
     assert cert[None]["n"] == 3 and cert[None]["p50"] == 2.0

@@ -68,3 +68,14 @@ def test_cosine_topk_rejects_label_col_without_match(spark, sf_dir):
         similarity.cosine_topk_vectorized(
             emb, F.col("vec_id") % 50 == 0, k=3, label_col="label"
         )
+
+
+def test_serving_collect_is_bounded(spark, sf_dir, monkeypatch):
+    """streaming_ann_pq_serving collects each microbatch's requests to
+    the driver to build its ADC tables; past MAX_SERVE_BATCH_ROWS it
+    must refuse, naming the entry, instead of collecting the batch."""
+    from flink_scala_spark.queries import streaming_queries
+
+    monkeypatch.setattr(streaming_queries, "MAX_SERVE_BATCH_ROWS", 0)
+    with pytest.raises(Exception, match="streaming_ann_pq_serving: a serving microbatch"):
+        QUERIES["streaming_ann_pq_serving"].fn(spark, sf_dir)

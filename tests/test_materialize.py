@@ -14,6 +14,11 @@ from flink_scala_spark import materialize
 
 ENGINE_ROOT = os.path.join(os.path.dirname(__file__), "..", "flink_scala_spark")
 
+#: A raw lineage-truncating call: ``.localCheckpoint(``, or
+#: ``checkpoint(`` as a method (``df.checkpoint(``) or a bare name —
+#: but not a longer identifier such as ``loop_checkpoint(``.
+RAW_MATERIALIZE = re.compile(r"\.localCheckpoint\(|(?<!\w)checkpoint\(")
+
 
 def test_no_raw_local_checkpoint_outside_materialize():
     """Every lineage-truncating materialization must go through
@@ -35,11 +40,20 @@ def test_no_raw_local_checkpoint_outside_materialize():
             src = open(path).read()
             for i, line in enumerate(src.split("\n"), 1):
                 code = line.split("#", 1)[0]
-                if re.search(r"\.localCheckpoint\(", code) or re.search(
-                    r"(?<![.\w])\bcheckpoint\(", code
-                ):
+                if RAW_MATERIALIZE.search(code):
                     offenders.append(f"{path}:{i}: {line.strip()}")
     assert not offenders, offenders
+
+
+def test_raw_materialize_lint_pattern():
+    """The lint must see method calls too: a reliable ``df.checkpoint(``
+    in the engine bypasses the mode switch just like a local one."""
+    for raw in ("df.localCheckpoint(eager=False)", "df.checkpoint(eager=True)",
+                "checkpoint(df)"):
+        assert RAW_MATERIALIZE.search(raw), raw
+    for ok in ("loop_checkpoint(df)", "df.transform(loop_checkpoint_lazy)",
+               "spark.sparkContext.setCheckpointDir(d)"):
+        assert not RAW_MATERIALIZE.search(ok), ok
 
 
 def test_shared_bounded_persist_mode_same_rows(spark, sf_dir, monkeypatch):
@@ -89,3 +103,20 @@ def test_loop_checkpoint_reliable_mode(spark, sf_dir, tmp_path, monkeypatch):
     out = materialize.loop_checkpoint(df)
     assert sorted(map(tuple, out.collect())) == expected
     assert os.listdir(str(tmp_path / "ckpt")), "no reliable checkpoint written"
+
+
+def test_bpe_loop_state_is_not_persisted(spark, sf_dir, monkeypatch):
+    """The BPE training vocabulary is LOOP state: it must go through
+    loop_checkpoint_lazy, so persist mode for bounded frames neither
+    changes the merges nor leaves one cached frame per iteration (with
+    an uncut lineage) behind."""
+    from flink_scala_spark.queries.catalog import QUERIES
+
+    bpe = QUERIES["bpe_merges"].fn
+    expected = sorted(map(tuple, bpe(spark, sf_dir).collect()))
+    assert expected
+
+    spark.catalog.clearCache()
+    monkeypatch.setenv("SPARK_GRAFT_SHARED_BOUNDED", "persist")
+    assert sorted(map(tuple, bpe(spark, sf_dir).collect())) == expected
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()

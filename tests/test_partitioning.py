@@ -9,6 +9,7 @@ from __future__ import annotations
 import contextlib
 import io
 
+import pytest
 from pyspark.sql import functions as F
 
 
@@ -111,6 +112,33 @@ def test_zorder_layout_shrinks_both_column_spans(spark, sf_dir):
     # round-robin (which leaves every partition spanning ~everything)
     assert z_u < base_u * 0.6, (z_u, base_u)
     assert z_v < base_v * 0.6, (z_v, base_v)
+
+
+def test_spread_leaves_file_less_frames_alone(spark):
+    """tables.spread cannot see the parallelism of a frame with no files
+    behind it (in-memory, checkpointed, streaming batch), so it must
+    return it unchanged — no Exchange — rather than guess a shuffle."""
+    from flink_scala_spark import tables
+
+    df = spark.createDataFrame([(i, i * 2) for i in range(100)], "a long, b long")
+    out = tables.spread(df)
+    assert out is df
+    assert "Exchange" not in _plan(out)
+
+
+def test_spread_repartitions_single_file_scan(spark, sf_dir):
+    """A one-file parquet scan is a single task; on a multi-core session
+    tables.spread round-robins it to defaultParallelism."""
+    from flink_scala_spark import tables
+
+    par = spark.sparkContext.defaultParallelism
+    if par < 2:
+        pytest.skip("needs a session with more than one core")
+    emb = tables.load(spark, sf_dir, "embeddings")
+    assert len(emb.inputFiles()) == 1
+    out = tables.spread(emb)
+    assert "RoundRobinPartitioning" in _plan(out)
+    assert out.rdd.getNumPartitions() == par
 
 
 # ---------------------------------------------------------------------------

@@ -69,11 +69,12 @@ def test_asof_join_single_shuffle(spark, sf_dir):
 
 
 def test_codegen_covers_similarity_scoring(spark, sf_dir):
-    """The flat-column JVM variant of top-k scoring must keep its
-    64-dim cosine arithmetic inside whole-stage codegen (flat columns
-    keep generated methods under Janino's 64 KB limit); an interpreted
-    scoring stage is ~15x slower. (The catalog entry uses the Arrow
-    path; this pins the library's codegen variant.)"""
+    """The flat-column JVM scoring path (IVF top-k: centroid assignment,
+    probing and candidate scoring) must keep its 64-dim cosine
+    arithmetic inside whole-stage codegen (flat columns keep generated
+    methods under Janino's 64 KB limit, with maxFields=256 covering the
+    2x(64+2)-column pair rows); an interpreted scoring stage is ~15x
+    slower."""
     import re
 
     from pyspark.sql import functions as F
@@ -82,14 +83,17 @@ def test_codegen_covers_similarity_scoring(spark, sf_dir):
     from flink_scala_spark.pipeline import similarity
 
     emb = tables.load(spark, sf_dir, "embeddings")
-    df = similarity.cosine_topk(emb, F.col("vec_id") % 50 == 0, k=5)
+    df = similarity.ivf_topk(emb, F.col("vec_id") % 50 == 0, k=5, nprobe=2)
     df.collect()  # AQE finalizes the plan only on execution of THIS df
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "isFinalPlan=true" in plan
-    # codegen stages print as "*(n) Operator"; the scoring Project and
-    # the join beneath it must both be starred
-    assert re.search(r"\*\(\d+\) Project \[query_id", plan), plan[:2000]
-    assert re.search(r"\*\(\d+\) BroadcastNestedLoopJoin", plan), plan[:2000]
+    # codegen stages print as "*(n) Operator"; the candidate-scoring
+    # and centroid-assignment Projects and the 132-column
+    # BroadcastNestedLoopJoin beneath the assignment must all be starred
+    for op in (r"Project \[query_id#\d+L, neighbor_id#\d+L, \(",
+               r"Project \[neighbor_id#\d+L, centroid_id#\d+L, \(",
+               r"BroadcastNestedLoopJoin"):
+        assert re.search(r"\*\(\d+\) " + op, plan), (op, plan[:3000])
 
 
 def test_pricing_summary_single_agg_shuffle_with_pushdown(spark, sf_dir):

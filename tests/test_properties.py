@@ -199,7 +199,7 @@ def test_group_quantiles_match_sorted_selection(spark, rows):
 
     data = [(k, v, i) for i, (k, v) in enumerate(rows)]
     df = spark.createDataFrame(data, "k string, v double, id long")
-    got = {r["k"]: r for r in group_quantiles(df, "k", "v", "id").collect()}
+    got = {r["k"]: r for r in group_quantiles(df, "k", "v").collect()}
     by_key: dict[str, list[float]] = {}
     for k, v, _ in data:
         by_key.setdefault(k, []).append(v)
@@ -814,7 +814,7 @@ def test_certified_quantiles_exact_and_certified(spark, vals):
         [("g", i, v) for i, v in enumerate(vals)],
         "k string, event_id long, value double",
     )
-    row = group_quantiles_certified(df, "k", "value", "event_id").collect()[0]
+    row = group_quantiles_certified(df, "k", "value").collect()[0]
     ordered = [v for v, _ in sorted(zip(vals, range(len(vals))))]
     n = len(vals)
     for q, col in ((0.5, "p50"), (0.9, "p90"), (0.99, "p99")):
