@@ -185,7 +185,7 @@ R1_RECORDED = [
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     from flink_scala_spark.queries import catalog
-    from flink_scala_spark.session import get_spark
+    from flink_scala_spark.session import get_spark, host_stamp
 
     spark = get_spark("bench")
 
@@ -255,6 +255,7 @@ def main() -> None:
         "runs_per_query": MEASURE_RUNS,
         "agg": "min",
         "timed_action": "noop_write",
+        "host": host_stamp(),
     }
     with open(os.path.join(REPO, "BENCH_FULL.json"), "w") as f:
         json.dump(full, f, indent=1, sort_keys=True)

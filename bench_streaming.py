@@ -4,7 +4,8 @@ query as a bounded replay at $SPARK_GRAFT_STREAM_SF_DIR (default
 
     {"metric": "streaming_replay_total_time", "value": total_sec,
      "unit": "sec", "queries": {name: {"sec": s, "input_rows": n,
-     "rows_per_sec": r, "batches": b}}, "sf": ...}
+     "rows_per_sec": r, "batches": b}}, "sf": ...,
+     "host": {"cpus": c, "mem_gb": m}}
 
 Rationale (VERDICT r5 ask #3): the batch bench (bench.py) records a
 wall-time trend for 65+ headline queries every round, but the streaming
@@ -40,7 +41,7 @@ def main() -> None:
         "SPARK_GRAFT_STREAM_SF_DIR", "/root/testdata/sf0.01"
     )
     from flink_scala_spark.queries import catalog
-    from flink_scala_spark.session import get_spark
+    from flink_scala_spark.session import get_spark, host_stamp
     from flink_scala_spark.streaming import runner
 
     spark = get_spark("bench_streaming")
@@ -50,9 +51,9 @@ def main() -> None:
     for name in names:
         fn = catalog.QUERIES[name].fn
         best = None
-        stats = {"input_rows": 0, "batches": 0}
+        rec = runner.RunRecord()
         for _ in range(MEASURE_RUNS):
-            runner.REPLAY_STATS.pop(name, None)
+            runner.RUNS.pop(name, None)
             spark.catalog.clearCache()
             t0 = time.time()
             df = fn(spark, sf_dir)
@@ -60,22 +61,20 @@ def main() -> None:
             wall = time.time() - t0
             if best is None or wall < best:
                 best = wall
-                stats = runner.REPLAY_STATS.get(
-                    name, {"input_rows": 0, "batches": 0}
-                ).copy()
+                rec = runner.RUNS.get(name, runner.RunRecord())
             del df
             gc.collect()
-        rate = stats["input_rows"] / best if best else 0.0
+        rate = rec.input_rows / best if best else 0.0
         results[name] = {
             "sec": round(best, 3),
-            "input_rows": stats["input_rows"],
+            "input_rows": rec.input_rows,
             "rows_per_sec": round(rate, 1),
-            "batches": stats["batches"],
+            "batches": rec.batches,
             "out_rows": n_out,
         }
         print(
-            f"# {name}: {stats['input_rows']} in-rows, {n_out} out-rows, "
-            f"{stats['batches']} batches in {best:.3f}s "
+            f"# {name}: {rec.input_rows} in-rows, {n_out} out-rows, "
+            f"{rec.batches} batches in {best:.3f}s "
             f"({rate:,.0f} rows/s)",
             file=sys.stderr,
         )
@@ -89,6 +88,7 @@ def main() -> None:
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
         "runs_per_query": MEASURE_RUNS,
         "agg": "min",
+        "host": host_stamp(),
     }
     print(json.dumps(out))
 

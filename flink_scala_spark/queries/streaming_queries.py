@@ -1357,31 +1357,19 @@ def q_streaming_rising_alarm_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
     replayed as ~7 time-ordered microbatches so the watermark
     actually climbs and fires timers mid-stream. The protobuf runtime
     the TWS worker needs is unlocked in-session
-    (streaming/tws.py:ensure_tws_runtime), so this runs on the
+    (streaming/tws.py:tws_session), so this runs on the
     driver's own vanilla SparkSession; the DuckDB oracle replays the
     measured watermark/timer semantics exactly (see _TWS_ALARM_ORACLE).
-    The `applyInPandasWithState` emulation twin is `rising_streak_alarm`
-    / `streaming_delta_alarm`."""
+    The `applyInPandasWithState` twin is `streaming_rising_alarm`."""
     from flink_scala_spark.streaming.runner import run_bounded_now
-    from flink_scala_spark.streaming.tws import ensure_tws_runtime, rising_alarm_tws
+    from flink_scala_spark.streaming.tws import rising_alarm_tws, tws_session
 
-    prev_provider = spark.conf.get(
-        "spark.sql.streaming.stateStore.providerClass", None
-    )
-    ensure_tws_runtime(spark)
-    try:
+    with tws_session(spark):
         src = sources.file_replay_time_buckets(
             spark, sf_dir, "events", _TWS_BUCKET_S
         )
         alarms = rising_alarm_tws(src, horizon_seconds=_TWS_HORIZON_S)
         return run_bounded_now(alarms, "append")
-    finally:
-        if prev_provider is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set(
-                "spark.sql.streaming.stateStore.providerClass", prev_provider
-            )
 
 
 # The running-summary processor emits one row per (key, batch-with-
@@ -1439,26 +1427,15 @@ def q_streaming_session_summary_tws(spark: SparkSession, sf_dir: str) -> DataFra
     to equal the whole-table aggregate the oracle computes."""
     from flink_scala_spark.streaming.runner import run_bounded_now
     from flink_scala_spark.streaming.tws import (
-        ensure_tws_runtime,
         session_summary_tws,
+        tws_session,
     )
 
-    prev_provider = spark.conf.get(
-        "spark.sql.streaming.stateStore.providerClass", None
-    )
-    ensure_tws_runtime(spark)
-    try:
+    with tws_session(spark):
         src = sources.file_replay_time_buckets(
             spark, sf_dir, "events", _TWS_BUCKET_S
         )
         out = run_bounded_now(session_summary_tws(src), "update")
-    finally:
-        if prev_provider is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set(
-                "spark.sql.streaming.stateStore.providerClass", prev_provider
-            )
     final = out.groupBy("user_id").agg(
         F.expr(
             "max_by(struct(n_events, n_types, max_type_cnt, last3_cents), n_events)"
@@ -1560,24 +1537,13 @@ def q_streaming_session_gap_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
     `streaming_session_windows`. Oracle: the measured bucket/watermark
     model (see _TWS_SESSION_ORACLE)."""
     from flink_scala_spark.streaming.runner import run_bounded_now
-    from flink_scala_spark.streaming.tws import ensure_tws_runtime, session_gap_tws
+    from flink_scala_spark.streaming.tws import session_gap_tws, tws_session
 
-    prev_provider = spark.conf.get(
-        "spark.sql.streaming.stateStore.providerClass", None
-    )
-    ensure_tws_runtime(spark)
-    try:
+    with tws_session(spark):
         src = sources.file_replay_time_buckets(
             spark, sf_dir, "events", _TWS_BUCKET_S
         )
         return run_bounded_now(session_gap_tws(src, _TWS_GAP_S), "append")
-    finally:
-        if prev_provider is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set(
-                "spark.sql.streaming.stateStore.providerClass", prev_provider
-            )
 
 
 # ---------------------------------------------------------------------------
@@ -1679,15 +1645,11 @@ def q_streaming_two_stream_reconcile_tws(
     batch boundaries."""
     from flink_scala_spark.streaming.runner import run_bounded_now
     from flink_scala_spark.streaming.tws import (
-        ensure_tws_runtime,
         two_stream_reconcile_tws,
+        tws_session,
     )
 
-    prev_provider = spark.conf.get(
-        "spark.sql.streaming.stateStore.providerClass", None
-    )
-    ensure_tws_runtime(spark)
-    try:
+    with tws_session(spark):
         # ONE replay source, tagged in-stream (round-11 review pass 3:
         # the previous two-source unionByName read every bucket file
         # twice per microbatch — 2x source I/O for an identical tagged
@@ -1712,13 +1674,6 @@ def q_streaming_two_stream_reconcile_tws(
         return run_bounded_now(
             two_stream_reconcile_tws(tagged, _TWS_RECONCILE_GAP_S), "append"
         )
-    finally:
-        if prev_provider is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set(
-                "spark.sql.streaming.stateStore.providerClass", prev_provider
-            )
 
 
 # ---------------------------------------------------------------------------
@@ -1816,13 +1771,9 @@ def q_streaming_trigger_fire_purge(spark: SparkSession, sf_dir: str) -> DataFram
     streaming form with real purge-on-fire state. Oracle: the measured
     timer/watermark model (_FIRE_PURGE_ORACLE)."""
     from flink_scala_spark.streaming.runner import run_bounded_now
-    from flink_scala_spark.streaming.tws import ensure_tws_runtime, fire_purge_tws
+    from flink_scala_spark.streaming.tws import fire_purge_tws, tws_session
 
-    prev_provider = spark.conf.get(
-        "spark.sql.streaming.stateStore.providerClass", None
-    )
-    ensure_tws_runtime(spark)
-    try:
+    with tws_session(spark):
         src = sources.file_replay_time_buckets(
             spark, sf_dir, "events", _FP_BUCKET_S
         )
@@ -1830,13 +1781,6 @@ def q_streaming_trigger_fire_purge(spark: SparkSession, sf_dir: str) -> DataFram
             fire_purge_tws(src, _FP_WINDOW_S, _FP_COUNT, _FP_EVICT_BELOW),
             "append",
         )
-    finally:
-        if prev_provider is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set(
-                "spark.sql.streaming.stateStore.providerClass", prev_provider
-            )
 
 
 # ---------------------------------------------------------------------------

@@ -10,6 +10,7 @@ event-time semantics are deterministic and DuckDB-comparable.
 
 from __future__ import annotations
 
+import contextlib
 import os
 
 from pyspark.sql import SparkSession
@@ -38,11 +39,42 @@ def get_spark(app_name: str = "flink_scala_spark", cpus: int | None = None) -> S
         # default maxFields=100 silently drops those stages out of
         # whole-stage codegen (~3x slower scoring)
         .config("spark.sql.codegen.maxFields", "256")
+        # the bounded runner sums q.recentProgress, which Spark caps at
+        # this many reports (default 100): keep every report of a replay
+        .config("spark.sql.streaming.numRecentProgressUpdates", "10000")
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     _ship_package_to_workers(spark)
     return spark
+
+
+def host_stamp() -> dict:
+    """Cores and memory of this host, stamped into bench artifacts so
+    that timings from different machines are never compared."""
+    mem = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return {"cpus": os.cpu_count(), "mem_gb": round(mem / 2**30, 1)}
+
+
+@contextlib.contextmanager
+def scoped_conf(spark: SparkSession, confs: dict[str, str]):
+    """Set ``confs`` on the session for the ``with`` block, then put
+    every previous value back, unsetting the ones that were unset.
+
+    The driver gate and the benches share one session across streaming
+    and batch queries, so a conf one query needs must not leak into
+    the next query's plan."""
+    prev = {k: spark.conf.get(k, None) for k in confs}
+    try:
+        for k, v in confs.items():
+            spark.conf.set(k, v)
+        yield
+    finally:
+        for k, v in prev.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
 
 
 def tune_existing(spark: SparkSession) -> SparkSession:
@@ -58,6 +90,7 @@ def tune_existing(spark: SparkSession) -> SparkSession:
         ("spark.sql.adaptive.skewJoin.enabled", "true"),
         ("spark.sql.execution.arrow.pyspark.enabled", "true"),
         ("spark.sql.codegen.maxFields", "256"),
+        ("spark.sql.streaming.numRecentProgressUpdates", "10000"),
     ):
         try:
             spark.conf.set(k, v)

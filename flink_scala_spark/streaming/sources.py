@@ -29,6 +29,8 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from flink_scala_spark.streaming import runner
+
 #: Replay dirs are pure functions of (sf_dir, table, bucketing), so one
 #: materialization serves every later invocation in the process (the
 #: repeatability test alone replays the same table twice); dirs are
@@ -52,25 +54,22 @@ def _replay_cache_cleanup() -> None:
 atexit.register(_replay_cache_cleanup)
 
 
-def _dir_bytes(path: str) -> int:
-    """Total bytes under ``path`` — the replay's input size, recorded
-    with runner.note_replay_input so the bounded runners can size
-    shuffle/state partitions from the data instead of the local core
-    count (see runner._replay_partitions)."""
-    total = 0
-    for root, _dirs, files in os.walk(path):
-        for f in files:
-            try:
-                total += os.path.getsize(os.path.join(root, f))
-            except OSError:
-                pass
-    return total
-
-
 def _note_replay(path: str) -> None:
-    from flink_scala_spark.streaming import runner
-
-    runner.note_replay_input(_dir_bytes(path))
+    """Note a replay input's size (one file or a directory tree) on the
+    current catalog entry's run record; the bounded runner sizes the
+    run's shuffle/state partitions from it (runner.replay_partitions).
+    Multi-source queries size for their largest side."""
+    files = [path] if os.path.isfile(path) else [
+        os.path.join(root, f) for root, _dirs, names in os.walk(path) for f in names
+    ]
+    nbytes = 0
+    for f in files:
+        try:
+            nbytes += os.path.getsize(f)
+        except OSError:
+            pass
+    rec = runner.record()
+    rec.replay_bytes = max(rec.replay_bytes, nbytes)
 
 
 def _layout_replay_dir(staged: str, out: str) -> str:
@@ -107,19 +106,7 @@ def file_replay(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
 
     batch = tables.load(spark, sf_dir, table)  # also sets nanosAsLong
     raw_schema = spark.read.option("pathGlobFilter", f"{table}.parquet").parquet(sf_dir).schema
-    try:
-        from flink_scala_spark.streaming import runner
-
-        path = os.path.join(sf_dir, f"{table}.parquet")
-        # a parquet DIRECTORY would getsize() its inode (no OSError)
-        # and silently record a tiny hint (round-12 ADVICE) — route
-        # directories through the recursive walk like the bucketed
-        # replay paths
-        runner.note_replay_input(
-            _dir_bytes(path) if os.path.isdir(path) else os.path.getsize(path)
-        )
-    except OSError:
-        pass
+    _note_replay(os.path.join(sf_dir, f"{table}.parquet"))
     stream = (
         spark.readStream.schema(raw_schema)
         .option("pathGlobFilter", f"{table}.parquet")

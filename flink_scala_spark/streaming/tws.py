@@ -18,17 +18,19 @@ ships a public protobuf runtime vendored inside the Google Cloud SDK;
 driver AND worker processes via ``PYTHONPATH`` **before** the JVM
 starts (plus ``TEMPORARILY_DISABLE_PROTOBUF_VERSION_CHECK=true`` —
 the vendored 6.32 runtime is one minor version behind pyspark's 6.33
-gencode, which protobuf's own escape hatch accepts). The
-``applyInPandasWithState`` emulation in ``stateful.py`` remains the
-default path; this module exists to prove the first-class timer API
-end-to-end whenever the dependency is present (pytest:
-``tests/test_tws_timers.py``).
+gencode, which protobuf's own escape hatch accepts).
 
-TWS additionally requires the RocksDB state store provider.
+Five driver-gate catalog entries (``streaming_*_tws``) run on this API
+through :func:`tws_session`, which unlocks the runtime in-session and
+sets the RocksDB state store provider TWS requires for the duration of
+the run; without a protobuf runtime they raise. ``stateful.py`` holds
+the ``applyInPandasWithState`` twins (e.g. ``streaming_rising_alarm``)
+of the same semantics.
 """
 
 from __future__ import annotations
 
+import contextlib
 import os
 import sys
 import tempfile
@@ -43,6 +45,7 @@ PROTOBUF_VENDOR_PATHS = (
 ROCKSDB_PROVIDER = (
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 )
+PROVIDER_CONF = "spark.sql.streaming.stateStore.providerClass"
 
 
 def protobuf_pythonpath() -> str | None:
@@ -101,7 +104,8 @@ def ensure_tws_runtime(spark) -> None:
        ``StreamingPythonRunner``, which only sees env vars.)
     2. The driver side only needs ``sys.path`` + ``os.environ``, both
        process-local and mutable at any time.
-    3. The RocksDB provider is a runtime SQL conf.
+    3. The RocksDB provider is a runtime SQL conf, set per run by
+       :func:`tws_session`.
 
     The vendored protobuf lives in a directory with many other
     top-level modules, so the path handed to workers is a scratch dir
@@ -111,9 +115,6 @@ def ensure_tws_runtime(spark) -> None:
     app_id = spark.sparkContext.applicationId
     with _READY_LOCK:
         if app_id in _READY_APP_IDS:
-            spark.conf.set(
-                "spark.sql.streaming.stateStore.providerClass", ROCKSDB_PROVIDER
-            )
             return
         _ensure_tws_runtime_locked(spark)
         _READY_APP_IDS.add(app_id)
@@ -122,12 +123,7 @@ def ensure_tws_runtime(spark) -> None:
 def _ensure_tws_runtime_locked(spark) -> None:
     path = protobuf_pythonpath()
     if path is None:
-        # Probe BEFORE touching session conf: on this error path nothing
-        # must leak into the shared session the caller hands us.
         raise RuntimeError("no protobuf runtime available for TWS workers")
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass", ROCKSDB_PROVIDER
-    )
     sc = spark.sparkContext
     os.environ["TEMPORARILY_DISABLE_PROTOBUF_VERSION_CHECK"] = "true"
     sc.environment["TEMPORARILY_DISABLE_PROTOBUF_VERSION_CHECK"] = "true"
@@ -139,6 +135,18 @@ def _ensure_tws_runtime_locked(spark) -> None:
         sc.environment["PYTHONPATH"] = (
             f"{link_dir}:{prev}" if prev else link_dir
         )
+
+
+@contextlib.contextmanager
+def tws_session(spark):
+    """Unlock the TWS runtime and run the ``with`` block on the RocksDB
+    state store provider; the previous provider is restored on exit,
+    also when the block raises."""
+    from flink_scala_spark.session import scoped_conf
+
+    ensure_tws_runtime(spark)
+    with scoped_conf(spark, {PROVIDER_CONF: ROCKSDB_PROVIDER}):
+        yield
 
 
 def build_rising_alarm_tws(horizon_seconds: int = 600):

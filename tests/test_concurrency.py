@@ -217,3 +217,41 @@ def test_compare_bench_recovers_streaming_wrapper_tails(tmp_path):
     p2 = tmp_path / "flat.json"
     p2.write_text(json.dumps({"parsed": None, "tail": flat_tail}))
     assert load_timings(str(p2)) == {"word_count": 0.3, "keyed_sum": 0.22}
+
+
+def test_compare_bench_refuses_cross_host_pairs(tmp_path, monkeypatch, capsys):
+    """Artifacts stamped with different hosts are refused like
+    cross-scale pairs; an unstamped artifact only warns."""
+    import json
+    import os
+    import sys
+
+    sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "tools"))
+    try:
+        import compare_bench
+    finally:
+        sys.path.pop(0)
+
+    def artifact(name, host):
+        doc = {"queries": {"word_count": 1.0}, "sf": 0.01}
+        if host:
+            doc["host"] = host
+        p = tmp_path / name
+        p.write_text(json.dumps(doc))
+        return str(p)
+
+    small = artifact("a.json", {"cpus": 4, "mem_gb": 15.7})
+    big = artifact("b.json", {"cpus": 32, "mem_gb": 125.8})
+    same = artifact("c.json", {"cpus": 4, "mem_gb": 15.7})
+    bare = artifact("d.json", None)
+
+    def run(a, b):
+        monkeypatch.setattr(sys, "argv", ["compare_bench.py", a, b])
+        return compare_bench.main(), capsys.readouterr().out
+
+    code, out = run(small, big)
+    assert code == 2 and "REFUSING cross-host" in out
+    code, out = run(small, same)
+    assert code == 0 and "REFUSING" not in out and "host stamp" not in out
+    code, out = run(small, bare)
+    assert code == 0 and "no host stamp" in out

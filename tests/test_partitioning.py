@@ -146,61 +146,68 @@ def test_spread_repartitions_single_file_scan(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 
-def test_replay_partitions_derive_from_bytes(spark, monkeypatch):
-    """The bounded-replay partition rule (runner._replay_partitions):
-    ceil(bytes / 128 MB) floored at 4, capped at the session's
-    parallelism, env-overridable — and inert when no replay source
-    recorded a hint (socket/rate streams)."""
-    from flink_scala_spark.streaming import runner
+def test_replay_partitions_derive_from_bytes(spark, tmp_path):
+    """The bounded-replay partition rule (runner.replay_partitions):
+    ceil(bytes / 128 MB), floored at min(4, parallelism), capped at
+    the parallelism — sized for the largest side of a multi-source
+    query, and inert when no replay source noted a size (socket/rate
+    streams)."""
+    from flink_scala_spark.streaming import order_source, runner, sources
+    from flink_scala_spark.streaming.runner import replay_partitions
 
-    par = spark.sparkContext.defaultParallelism
-    monkeypatch.delenv("SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS", raising=False)
-
-    runner._PENDING_REPLAY_BYTES.clear()
-    assert runner._replay_partitions(spark) is None  # no hint -> untouched
-
-    runner.note_replay_input(2 * 1024 * 1024)  # 2 MB replay
-    assert runner._replay_partitions(spark) == str(min(4, par))
-
-    runner._PENDING_REPLAY_BYTES.clear()
-    runner.note_replay_input(1024**4)  # 1 TB replay -> parallelism cap
-    assert runner._replay_partitions(spark) == str(par)
+    mb = 1024 * 1024
+    assert replay_partitions(2 * mb, 32) == 4  # floor
+    assert replay_partitions(2 * mb, 2) == 2  # floor capped at par
+    assert replay_partitions(300 * mb, 32) == 4  # ceil(300/128) = 3
+    assert replay_partitions(600 * mb, 32) == 5  # ceil(600/128) = 5
+    assert replay_partitions(1024**4, 32) == 32  # 1 TB -> par cap
 
     # multi-source queries size for the LARGEST side
-    runner._PENDING_REPLAY_BYTES.clear()
-    runner.note_replay_input(1 * 1024 * 1024)
-    runner.note_replay_input(300 * 1024 * 1024)
-    expect = max(min(4, par), min(par, 3))  # ceil(300MB/128MB) = 3
-    assert runner._replay_partitions(spark) == str(expect)
+    runner.RUNS.pop(None, None)
+    small, large = tmp_path / "small.bin", tmp_path / "large.bin"
+    small.write_bytes(b"x" * 1000)
+    large.write_bytes(b"x" * 5000)
+    sources._note_replay(str(small))
+    sources._note_replay(str(large))
+    sources._note_replay(str(small))
+    assert runner.RUNS[None].replay_bytes == 5000
 
-    # round 13: _replay_partitions CONSUMES (reads and clears) the
-    # pending hints, so each probe below notes its own hint first
-    assert not runner._PENDING_REPLAY_BYTES, "hints must be consumed"
-    monkeypatch.setenv("SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS", "7")
-    runner.note_replay_input(2 * 1024 * 1024)
-    assert runner._replay_partitions(spark) == "7"
-
-    # a junk env value falls back to byte-derived sizing instead of
-    # crashing the bounded run (round-12 ADVICE)
-    monkeypatch.setenv("SPARK_GRAFT_STREAM_SHUFFLE_PARTITIONS", "lots")
-    runner.note_replay_input(2 * 1024 * 1024)
-    assert runner._replay_partitions(spark) == str(min(4, par))
-    runner._PENDING_REPLAY_BYTES.clear()
+    # no replay source: the run keeps the session's shuffle partitions
+    runner.RUNS.pop(None, None)
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    order_source.register(spark)
+    sdf = (
+        spark.readStream.format("order_gen")
+        .option("n", 60)
+        .option("rowsPerBatch", 50)
+        .load()
+    )
+    assert runner.run_bounded(sdf, "append").count() == 60
+    rec = runner.RUNS[None]
+    assert rec.partitions is None
+    assert (rec.input_rows, rec.batches) == (60, 2)
+    assert spark.conf.get("spark.sql.shuffle.partitions") == prev
 
 
 def test_replay_partition_conf_restored_after_bounded_run(spark, sf_dir):
-    """A bounded replay run must size its own partitions and then put
-    the session value BACK — the driver gate and bench share one
-    session across streaming and batch queries, so a leak would
-    repartition every subsequent batch plan."""
+    """A bounded replay run must size its own partitions from the
+    bytes its source noted and then put the session value BACK — the
+    driver gate and bench share one session across streaming and batch
+    queries, so a leak would repartition every subsequent batch plan."""
     from flink_scala_spark.streaming import runner, sources
 
+    runner.RUNS.pop(None, None)
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     src = sources.file_replay_time_buckets(spark, sf_dir, "events", 86400)
-    assert runner._PENDING_REPLAY_BYTES, "replay source must record its size"
+    nbytes = runner.RUNS[None].replay_bytes
+    assert nbytes > 0, "replay source must record its size"
     out = runner.run_bounded(
         src.groupBy("event_type").count(), "complete"
     )
     assert out.count() > 0
+    rec = runner.RUNS[None]
+    assert rec.partitions == runner.replay_partitions(
+        nbytes, spark.sparkContext.defaultParallelism
+    )
+    assert rec.replay_bytes == 0, "the run must consume its size note"
     assert spark.conf.get("spark.sql.shuffle.partitions") == prev
-    assert not runner._PENDING_REPLAY_BYTES, "hints must be consumed"

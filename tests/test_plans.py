@@ -748,9 +748,11 @@ def test_streaming_plans_pin_state_operators(spark, sf_dir):
     )
     failures = {}
     for name in sorted(live):
-        if name not in runner.LAST_PLANS:
+        rec = runner.RUNS.get(name)
+        if rec is None or rec.plan is None:
             QUERIES[name].fn(spark, sf_dir)
-        plan = runner.LAST_PLANS.get(name)
+            rec = runner.RUNS.get(name)
+        plan = rec.plan if rec else None
         if plan is None:
             failures[name] = ["no plan captured"]
             continue

@@ -181,3 +181,28 @@ def test_order_gen_stream_exhausts_at_n(spark):
     got = run_bounded(sdf, "append")
     assert got.count() == 130
     assert got.select("order_id").distinct().count() == 130
+
+
+def test_bounded_runs_leave_no_memory_sink_views(spark):
+    """Each bounded run's memory-sink view is dropped once its result
+    frame is built, so a long-lived driver does not keep the sink rows
+    of every run; the returned frames still collect."""
+    from flink_scala_spark.streaming import order_source
+    from flink_scala_spark.streaming.runner import run_bounded
+
+    order_source.register(spark)
+
+    def orders(n):
+        return (
+            spark.readStream.format("order_gen")
+            .option("n", n)
+            .option("rowsPerBatch", 50)
+            .load()
+        )
+
+    a = run_bounded(orders(60), "append")
+    b = run_bounded(orders(80), "append")
+    views = [t.name for t in spark.catalog.listTables() if t.name.startswith("fss_q")]
+    assert views == []
+    assert len(a.collect()) == 60
+    assert len(b.collect()) == 80

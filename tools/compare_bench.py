@@ -20,19 +20,28 @@ import re
 import sys
 
 
+def load_field(path: str, key: str):
+    """Top-level ``key`` of a raw bench line or of a driver wrapper's
+    ``parsed`` line; None when absent."""
+    with open(path) as f:
+        doc = json.load(f)
+    if key in doc:
+        return doc[key]
+    parsed = doc.get("parsed")
+    return parsed.get(key) if isinstance(parsed, dict) else None
+
+
 def load_sf(path: str) -> float | None:
     """Best-effort scale factor of a bench artifact (None when the
     driver-wrapper tail is truncated before the sf key)."""
-    with open(path) as f:
-        doc = json.load(f)
-    if "sf" in doc and not isinstance(doc.get("sf"), dict):
+    sf = load_field(path, "sf")
+    if sf is not None:
         try:
-            return float(doc["sf"])
+            return float(sf)
         except (TypeError, ValueError):
             return None
-    if doc.get("parsed"):
-        return doc["parsed"].get("sf")
-    m = re.search(r'"sf":\s*([0-9.]+)', doc.get("tail", ""))
+    with open(path) as f:
+        m = re.search(r'"sf":\s*([0-9.]+)', json.load(f).get("tail", ""))
     return float(m.group(1)) if m else None
 
 
@@ -90,22 +99,28 @@ def main() -> int:
             f"sf={sf_old}, {sys.argv[2]} is sf={sf_new}"
         )
         return 2
+    # Timings from hosts with different cores or memory are not
+    # comparable either; artifacts from before the host stamp only warn.
+    h_old, h_new = load_field(sys.argv[1], "host"), load_field(sys.argv[2], "host")
+    if h_old and h_new and h_old != h_new:
+        print(
+            f"REFUSING cross-host comparison: {sys.argv[1]} ran on "
+            f"{h_old}, {sys.argv[2]} on {h_new}"
+        )
+        return 2
+    for p, h in ((sys.argv[1], h_old), (sys.argv[2], h_new)):
+        if not h:
+            print(
+                f"WARNING: {p} carries no host stamp — cross-host ratios "
+                "are not refused for this pair"
+            )
     # Round 13 re-based the timed action from .count() to a noop-sink
     # write (BENCH_FULL carries "timed_action": "noop_write"; earlier
     # artifacts carry nothing). Comparing across the metric switch
     # mixes pruned-output timings with full-materialization ones —
     # warn loudly (the identical-tree re-base pair in plans/r13/ is
     # the bridge).
-    def _action(path: str) -> str:
-        with open(path) as f:
-            doc = json.load(f)
-        return doc.get("timed_action") or (
-            (doc.get("parsed") or {}).get("timed_action")
-            if isinstance(doc.get("parsed"), dict)
-            else None
-        ) or "count"
-
-    a_old, a_new = _action(sys.argv[1]), _action(sys.argv[2])
+    a_old, a_new = (load_field(p, "timed_action") or "count" for p in sys.argv[1:3])
     if a_old != a_new:
         print(
             f"WARNING: timed action differs ({sys.argv[1]}={a_old}, "
