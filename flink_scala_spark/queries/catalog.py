@@ -119,7 +119,7 @@ def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
            round(sum(o_totalprice), 2) AS total_money
     FROM orders GROUP BY 1
     """,
-    "A4", "flagship",
+    "A4", "flagship", "bench",
 )
 def q_order_dashboard_total(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dashboard.order_totals_by_day(tables.load(spark, sf_dir, "orders"))
@@ -137,7 +137,7 @@ def q_order_dashboard_total(spark: SparkSession, sf_dir: str) -> DataFrame:
     JOIN nation n ON c.c_nationkey = n.n_nationkey
     GROUP BY 1, 2
     """,
-    "A4", "flagship", "join",
+    "A4", "flagship", "join", "bench",
 )
 def q_order_dashboard_province(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dashboard.order_totals_by_day_province(
@@ -190,7 +190,7 @@ def q_order_dashboard_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
     GROUP BY l_returnflag, l_linestatus
     """,
-    "A1", "A4", "scan",
+    "A1", "A4", "scan", "bench",
 )
 def q_lineitem_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pricing summary over the engine's biggest table (the TPC-H Q1
@@ -235,7 +235,7 @@ def q_lineitem_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     JOIN part p ON l.l_partkey = p.p_partkey
     GROUP BY 1, 2
     """,
-    "A4", "join", "scan",
+    "A4", "join", "scan", "bench",
 )
 def q_revenue_by_region_parttype(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Star-join revenue rollup: the fact table streams once; every
@@ -284,7 +284,7 @@ def q_revenue_by_region_parttype(spark: SparkSession, sf_dir: str) -> DataFrame:
           FROM agg) t
     WHERE rank <= 10
     """,
-    "join", "topn", "scan",
+    "join", "topn", "scan", "bench",
 )
 def q_shipping_priority_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q3 shape: segment-filtered customers (broadcast) x
@@ -331,7 +331,7 @@ def q_shipping_priority_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
                       WHERE l.l_orderkey = o.o_orderkey
                         AND l.l_shipdate >= TIMESTAMP '2001-01-01 00:00:00')
     """,
-    "join", "antijoin",
+    "join", "antijoin", "bench",
 )
 def q_orders_without_recent_shipments(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Left ANTI join (NOT EXISTS): orders with no lineitem shipped in
@@ -436,7 +436,7 @@ def q_top_events_per_user(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE word <> ''
     GROUP BY word
     """,
-    "T2", "T3", "A1", "S1",
+    "T2", "T3", "A1", "S1", "bench",
 )
 def q_word_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = tables.load(spark, sf_dir, "documents")
@@ -569,7 +569,7 @@ def q_side_output_alarm(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT user_id, round(sum(value), 2) AS total
     FROM events GROUP BY user_id
     """,
-    "A1", "T4",
+    "A1", "T4", "bench",
 )
 def q_keyed_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
     return agg_ops.keyed_sum(_events(spark, sf_dir), "user_id", "value")
@@ -603,7 +603,7 @@ def q_keyed_sum_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
            max(CASE WHEN rn = ceil(0.99 * n) THEN value END) AS p99
     FROM ranked GROUP BY event_type
     """,
-    "analytics", "quantile", "scale",
+    "analytics", "quantile", "scale", "bench",
 )
 def q_event_value_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact distributed per-group p50/p90/p99 by portable rank
@@ -630,7 +630,7 @@ def q_event_value_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM (SELECT event_type, CAST(props ->> '$.k' AS INT) AS k FROM events) t
     GROUP BY event_type
     """,
-    "semistructured", "json",
+    "semistructured", "json", "bench",
 )
 def q_events_json_props(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Semi-structured path: parse the events.props JSON payload
@@ -706,7 +706,7 @@ EVENT_TYPES = ("click", "error", "purchase", "signup", "view")
            CAST(sum(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END) AS BIGINT) AS view
     FROM events GROUP BY user_id
     """,
-    "pivot", "A4",
+    "pivot", "A4", "bench",
 )
 def q_events_type_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Wide-format per-user event counts via pivot. The pivot values
@@ -738,7 +738,7 @@ def q_events_type_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
           FROM events) t
     WHERE rn = 1
     """,
-    "A3", "cdc",
+    "A3", "cdc", "bench",
 )
 def q_latest_event_per_key(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Last-write-wins compaction (the CDC/upsert dedup every
@@ -773,7 +773,7 @@ def q_latest_event_per_key(spark: SparkSession, sf_dir: str) -> DataFrame:
                  ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW), 2) AS running_total
     FROM events
     """,
-    "A1",
+    "A1", "bench",
 )
 def q_running_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
     return agg_ops.running_sum(_events(spark, sf_dir), "user_id", "event_id", "value")
@@ -820,7 +820,7 @@ def q_ordered_fold_general(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM events
     ) t WHERE rn = 1
     """,
-    "A3",
+    "A3", "bench",
 )
 def q_arg_min_row(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = agg_ops.arg_min(
@@ -843,7 +843,7 @@ def q_arg_min_row(spark: SparkSession, sf_dir: str) -> DataFrame:
            round(sum(value), 2) AS total
     FROM events GROUP BY 1, 2, 3
     """,
-    "W4", "W10",
+    "W4", "W10", "bench",
 )
 def q_tumbling_window_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _events(spark, sf_dir)
@@ -964,7 +964,7 @@ def q_window_all_minute(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM events
     ) t GROUP BY ws, event_type
     """,
-    "W4", "sliding",
+    "W4", "sliding", "bench",
 )
 def q_sliding_window_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _events(spark, sf_dir)
@@ -993,7 +993,7 @@ def q_sliding_window_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
            count(*) AS cnt
     FROM numbered GROUP BY user_id, session_id
     """,
-    "session",
+    "session", "bench",
 )
 def q_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _events(spark, sf_dir)
@@ -1031,7 +1031,7 @@ def q_evictor_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
     WINDOW w AS (PARTITION BY CAST(floor(epoch(ts) / 600) * 600 AS BIGINT), user_id
                  ORDER BY CAST(floor(epoch(ts)) AS BIGINT), event_id)
     """,
-    "W8",
+    "W8", "bench",
 )
 def q_trigger_per_element_fire(spark: SparkSession, sf_dir: str) -> DataFrame:
     """W8 custom trigger (UtcTrigger, TestTriggerAndEvictor.scala:84-107):
@@ -1079,7 +1079,7 @@ def q_late_data_accounting(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM events
     ) t WHERE abs(value - prev) > 10.0
     """,
-    "ST1", "ST2", "ST3",
+    "ST1", "ST2", "ST3", "bench",
 )
 def q_delta_alarm(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ST1-ST3 batch twin: |Δvalue| > 10 between consecutive per-key
@@ -1186,7 +1186,7 @@ def register_catalog_views(
         FROM events
     ) t GROUP BY user_id, window_seq
     """,
-    "W4", "count-window",
+    "W4", "count-window", "bench",
 )
 def q_count_window_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Keyed count window (10 events per window per user): the
@@ -1257,7 +1257,7 @@ def q_count_window_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
       ON e.event_type = m.event_type
     GROUP BY e.event_type
     """,
-    "scale", "skew", "join",
+    "scale", "skew", "join", "bench",
 )
 def q_skew_join_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Skewed-key join de-skewed by salting: event_type has ~5 hot
@@ -1288,7 +1288,7 @@ def q_skew_join_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
            count(*) AS cnt
     FROM events GROUP BY 1, 2
     """,
-    "analytics", "histogram",
+    "analytics", "histogram", "bench",
 )
 def q_value_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fixed-width value histogram per event type — one map-side
@@ -1313,7 +1313,7 @@ def q_value_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
               FROM events GROUP BY 1, 2) t
     ) t2 WHERE rank <= 3
     """,
-    "analytics", "trending", "topk",
+    "analytics", "trending", "topk", "bench",
 )
 def q_windowed_topk_types(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Trending shape: top-3 event types per hour window — a windowed
@@ -1356,7 +1356,7 @@ def q_windowed_topk_types(spark: SparkSession, sf_dir: str) -> DataFrame:
            round(sum(value), 2) AS total_value
     FROM numbered GROUP BY user_id, session_id
     """,
-    "session", "analytics",
+    "session", "analytics", "bench",
 )
 def q_session_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session-level rollup: sessionization (gaps-and-islands, 600 s

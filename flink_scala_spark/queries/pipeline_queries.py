@@ -143,7 +143,7 @@ def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
                ON a.band = b.band AND a.key = b.key AND a.doc_id < b.doc_id),
     {_VERIFY_HASHED_SQL.format(thr=0.5)}
     """,
-    "dedup", "minhash", "lsh",
+    "dedup", "minhash", "lsh", "bench",
 )
 def q_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup.minhash_lsh_dedup(_docs(spark, sf_dir), threshold=0.5)
@@ -239,7 +239,7 @@ _SIMHASH_BANDS_SQL = "\n  UNION ALL ".join(
     SELECT doc_a, doc_b, CAST(bit_count(xor(sim_a, sim_b)) AS INT) AS hamming
     FROM pairs WHERE bit_count(xor(sim_a, sim_b)) <= 3
     """,
-    "dedup", "simhash",
+    "dedup", "simhash", "bench",
 )
 def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup.simhash_near_dup(_docs(spark, sf_dir), max_hamming=3)
@@ -262,7 +262,7 @@ _NSQ = duck_dot("embedding", "embedding")
         FROM n a JOIN n b ON a.vec_id < b.vec_id
     ) t WHERE cosine >= 0.4
     """,
-    "dedup", "embedding",
+    "dedup", "embedding", "bench",
 )
 def q_embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact embedding near-dup via the distributed block-nested-loop
@@ -285,7 +285,7 @@ def q_embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM p
     ) t WHERE rank <= 5
     """,
-    "similarity", "ann",
+    "similarity", "ann", "bench",
 )
 def q_ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _emb(spark, sf_dir)
@@ -374,7 +374,7 @@ _IVF_SERVING_CTES = f"""n AS (SELECT vec_id, embedding, label, {_NSQ} AS nsq FRO
                                      ORDER BY cosine DESC, neighbor_id) AS rank
         FROM scored) t WHERE rank <= 5
     """,
-    "similarity", "ann", "ivf",
+    "similarity", "ann", "ivf", "bench",
 )
 def q_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF ANN with a Lloyd's-TRAINED fixed-size coarse quantizer
@@ -424,7 +424,7 @@ _BUCKET_EXPR = " + ".join(
         FROM base a JOIN base b ON a.bucket = b.bucket AND a.vec_id < b.vec_id
     ) t WHERE cosine >= 0.35
     """,
-    "similarity", "ann", "lsh",
+    "similarity", "ann", "lsh", "bench",
 )
 def q_ann_lsh_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     return similarity.lsh_near_dup_pairs_vectorized(
@@ -445,7 +445,7 @@ def q_ann_lsh_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(s AS DOUBLE) / (1000000.0 * CAST(n AS DOUBLE)) AS centroid
     FROM agg
     """,
-    "embedding", "clustering", "scale",
+    "embedding", "clustering", "scale", "bench",
 )
 def q_embedding_label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-label embedding centroids with deterministic fixed-point
@@ -496,7 +496,7 @@ def q_hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
                                      ORDER BY cosine DESC, neighbor_id) AS rank
         FROM scored) t WHERE rank <= 10
     """,
-    "similarity", "contrastive", "ivf",
+    "similarity", "contrastive", "ivf", "bench",
 )
 def q_hard_negative_mining_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hard-negative mining at IVF cost (the 100 TB path): probe the 4
@@ -535,7 +535,7 @@ def q_hard_negative_mining_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT query_id, neighbor_id, cosine, CAST(rank AS INT) AS rank, 'neg' AS role
     FROM r WHERE NOT same AND rank <= 4
     """,
-    "similarity", "contrastive",
+    "similarity", "contrastive", "bench",
 )
 def q_contrastive_triplets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Contrastive triplet construction: per anchor, the single most-
@@ -744,7 +744,7 @@ def q_semantic_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(length(text) AS INT) AS n_chars
     FROM documents
     """,
-    "text",
+    "text", "bench",
 )
 def q_text_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     return text.token_stats(_docs(spark, sf_dir))
@@ -860,7 +860,7 @@ def q_text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(greatest(length(text) - {text.FP_KGRAM - 1}, 0) AS INT) AS n_kgrams
     FROM documents
     """,
-    "text", "fingerprint",
+    "text", "fingerprint", "bench",
 )
 def q_text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     return text.fingerprint(_docs(spark, sf_dir))
@@ -910,7 +910,7 @@ def q_dataset_split(spark: SparkSession, sf_dir: str) -> DataFrame:
            LEFT JOIN a2 USING (doc_id)
            LEFT JOIN a3 USING (doc_id)
     """,
-    "text", "repetition", "quality",
+    "text", "repetition", "quality", "bench",
 )
 def q_text_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gopher-style repetition filters: top-word fraction and duplicate
@@ -944,7 +944,7 @@ _PII_DERIVE_DUCK = (
                               '{text.PHONE_RE}', '<PHONE>', 'g')) AS redacted_md5
     FROM p
     """,
-    "text", "pii",
+    "text", "pii", "bench",
 )
 def q_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PII redaction (emails/phones) over a deterministically planted
@@ -981,7 +981,7 @@ _SPLIT_B = duck_h60("CAST(doc_id AS VARCHAR)") + " % 100"
                AS contamination_frac
     FROM tot LEFT JOIN hits h USING (doc_id)
     """,
-    "text", "decontamination", "dedup",
+    "text", "decontamination", "dedup", "bench",
 )
 def q_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Benchmark-leakage check: 5-gram overlap of every train doc
@@ -1227,7 +1227,7 @@ def q_multimodal_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     ASOF JOIN (SELECT * FROM events WHERE event_type = 'click') c
       ON p.user_id = c.user_id AND p.ts >= c.ts
     """,
-    "join", "asof",
+    "join", "asof", "bench",
 )
 def q_asof_join_purchase_click(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _events(spark, sf_dir)
@@ -1247,7 +1247,7 @@ def q_asof_join_purchase_click(spark: SparkSession, sf_dir: str) -> DataFrame:
      AND c.ts <= e.ts
     GROUP BY 1
     """,
-    "join", "interval",
+    "join", "interval", "bench",
 )
 def q_interval_join_error_clicks(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _events(spark, sf_dir)
@@ -1342,7 +1342,7 @@ def q_sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(m.active_users AS DOUBLE) / CAST(cs.cohort_size AS DOUBLE) AS retention
     FROM m JOIN cs USING (cohort_day)
     """,
-    "behavior", "cohort",
+    "behavior", "cohort", "bench",
 )
 def q_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cohort retention matrix: users bucketed by first-seen day,
@@ -1376,7 +1376,7 @@ def q_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     UNION ALL
     SELECT 2, 'purchase', c2, CAST(c2 AS DOUBLE) / CAST(c0 AS DOUBLE) FROM c
     """,
-    "behavior", "funnel",
+    "behavior", "funnel", "bench",
 )
 def q_funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Earliest-event-chain funnel view -> click -> purchase: per-user
@@ -1415,7 +1415,7 @@ def q_funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
            END AS max_abs_err
     FROM q
     """,
-    "similarity", "quantization",
+    "similarity", "quantization", "bench",
 )
 def q_embedding_quantize_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Symmetric per-vector int8 quantization with reconstruction-error
@@ -1538,7 +1538,7 @@ _KM_SQL = (
 @register(
     "kmeans_assignments",
     _KM_SQL,
-    "embedding", "clustering", "iterative",
+    "embedding", "clustering", "iterative", "bench",
 )
 def q_kmeans_assignments(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two fixed Lloyd iterations of k-means (k=8) with an EXACT
@@ -1585,7 +1585,7 @@ p{it} AS (SELECT n.doc_id, n.deg,
     {_PR_ITER.format(it=3, prev=2, teleport=_PR_TELEPORT)}
     SELECT doc_id, deg, pr FROM p3
     """,
-    "dedup", "graph", "pagerank",
+    "dedup", "graph", "pagerank", "bench",
 )
 def q_dedup_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fixed-point integer PageRank (3 iterations, d=0.85) over the
@@ -1618,7 +1618,7 @@ def q_dedup_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(coalesce(k.n_kept, 0) AS BIGINT) AS n_kept
     FROM rates r LEFT JOIN kept k ON r.source = k.source
     """,
-    "sampling", "mixture",
+    "sampling", "mixture", "bench",
 )
 def q_corpus_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Weighted training-mixture resampling with data-derived keep
@@ -1704,7 +1704,7 @@ def _bpe_iter(it: int) -> str:
     UNION ALL SELECT 2, a, b, pf FROM b2
     UNION ALL SELECT 3, a, b, pf FROM b3
     """,
-    "text", "tokenizer", "iterative",
+    "text", "tokenizer", "iterative", "bench",
 )
 def q_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """First three BPE merges learned over the corpus vocabulary —
@@ -1730,7 +1730,7 @@ def q_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT word_a, word_b
     FROM cand WHERE levenshtein(word_a, word_b) = 1
     """,
-    "text", "fuzzy-join", "entity-resolution",
+    "text", "fuzzy-join", "entity-resolution", "bench",
 )
 def q_fuzzy_name_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Entity-resolution candidates: customer names within edit
@@ -1775,7 +1775,7 @@ _BANDS_C = _BAND_SELECTS.replace("FROM sig", "FROM sigc")
              JOIN cnt cb ON cb.doc_id = com.corpus_id
     WHERE CAST(common AS DOUBLE) / CAST(ca.n + cb.n - common AS DOUBLE) >= 0.5
     """,
-    "dedup", "incremental",
+    "dedup", "incremental", "bench",
 )
 def q_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental MinHash dedup: odd doc_ids (the 'new batch') checked
@@ -2481,7 +2481,7 @@ def q_dedup_substring_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
                AS longest_run_words
     FROM runs GROUP BY 1, 2
     """.format(split_b=_SPLIT_B, max_df=text.RUN_SPAN_MAX_DF),
-    "text", "decontamination", "dedup", "severity",
+    "text", "decontamination", "dedup", "severity", "bench",
 )
 def q_contamination_longest_run(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Contamination SEVERITY (X219): per (train doc, test doc) pair
@@ -2611,10 +2611,12 @@ def q_text_rare_token_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
 # X122: connected components via alternating star (O(log n) rounds)
 # ---------------------------------------------------------------------------
 
+# Benched instead of dedup_clusters: label propagation was the slowest,
+# most variance-prone batch entry, and it stays as the oracle anchor.
 @register(
     "dedup_clusters_star",
     QUERIES["dedup_clusters"].oracle,  # identical result contract
-    "dedup", "clusters", "graph",
+    "dedup", "clusters", "graph", "bench",
 )
 def q_dedup_clusters_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X16's cluster assignment recomputed by the alternating
@@ -2800,7 +2802,7 @@ def q_entity_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
            TRUE AS within_gk_bound
     FROM ranked GROUP BY event_type
     """,
-    "sketch", "quantile", "analytics",
+    "sketch", "quantile", "analytics", "bench",
 )
 def q_approx_quantiles_certified(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The approximate-quantile production path (`percentile_approx`,
@@ -3043,7 +3045,7 @@ def q_corpus_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(sum(doc_id) AS BIGINT) AS sum_ids
     FROM documents GROUP BY 1, 2
     """,
-    "X70", "maintenance", "compaction",
+    "X70", "maintenance", "compaction", "bench",
 )
 def q_compaction_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Small-file compaction end-to-end under the correctness gate:
@@ -3122,7 +3124,7 @@ _ZORDER_ORACLE = """
 @register(
     "zorder_roundtrip",
     _ZORDER_ORACLE,
-    "X97", "maintenance", "zorder",
+    "X97", "maintenance", "zorder", "bench",
 )
 def q_zorder_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Z-order clustering end-to-end under the correctness gate: lay
@@ -3457,7 +3459,7 @@ def q_ngram_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(cum_toks AS BIGINT) AS cum_toks
     FROM ranked WHERE cum_toks - toks < cap_toks
     """,
-    "sampling", "mixture", "budget",
+    "sampling", "mixture", "budget", "bench",
 )
 def q_corpus_budget_sampler(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Token-budget-capped selection: within each (lang, source)
@@ -3574,7 +3576,7 @@ def q_corpus_budget_sampler(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(rep.rep_ppm >= gstats.global_ppm AS INT) AS keep
     FROM per_doc p JOIN rep USING (source) CROSS JOIN gstats
     """,
-    "curation", "quality", "source",
+    "curation", "quality", "source", "bench",
 )
 def q_source_reputation_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Domain-level curation — the CommonCrawl-style rule that filters
@@ -3629,6 +3631,58 @@ def q_source_reputation_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _MINE_TOPK = 4
 _MINE_THRESHOLD = 1.10
+
+
+def _margin_mine(candidates: DataFrame) -> DataFrame:
+    """The margin criterion the bitext miners share. ``candidates``
+    holds candidate (a, b) rows with flat vectors (``a1..``/``ansq``,
+    ``b1..``/``bnsq``); each side's mean over its top-``_MINE_TOPK``
+    candidate cosines (a fixed-order fold, bit-identical to the
+    oracle's ``list_reduce``) normalizes the pair cosine, and each
+    source keeps its best target iff the margin clears
+    ``_MINE_THRESHOLD``."""
+    pairs = candidates.select(
+        "vec_a", "vec_b", similarity._flat_cosine("a", "b").alias("cosine")
+    )
+    wa = Window.partitionBy("vec_a").orderBy(F.desc("cosine"), "vec_b")
+    wb = Window.partitionBy("vec_b").orderBy(F.desc("cosine"), "vec_a")
+    ranked = pairs.withColumn("rnk_a", F.row_number().over(wa)).withColumn(
+        "rnk_b", F.row_number().over(wb)
+    )
+
+    def mean_top(side: str) -> DataFrame:
+        rnk = f"rnk_{side}"
+        fold = F.aggregate(
+            F.transform(
+                F.array_sort(F.collect_list(F.struct(rnk, "cosine"))),
+                lambda s: s["cosine"],
+            ),
+            F.lit(0.0),
+            lambda acc, x: acc + x,
+        ) / _MINE_TOPK
+        return (
+            ranked.where(F.col(rnk) <= _MINE_TOPK)
+            .groupBy(f"vec_{side}")
+            .agg(fold.alias(f"avg_{side}"))
+        )
+
+    scored = (
+        pairs.join(F.broadcast(mean_top("a")), "vec_a")
+        .join(F.broadcast(mean_top("b")), "vec_b")
+        .select(
+            "vec_a", "vec_b", "cosine",
+            (
+                (F.lit(2.0) * F.col("cosine"))
+                / (F.col("avg_a") + F.col("avg_b"))
+            ).alias("margin"),
+        )
+    )
+    wm = Window.partitionBy("vec_a").orderBy(F.desc("margin"), "vec_b")
+    return (
+        scored.withColumn("r", F.row_number().over(wm))
+        .where((F.col("r") == 1) & (F.col("margin") >= _MINE_THRESHOLD))
+        .select("vec_a", "vec_b", "cosine", "margin")
+    )
 
 
 @register(
@@ -3689,8 +3743,6 @@ def q_bitext_mining_margin(spark: SparkSession, sf_dir: str) -> DataFrame:
     neighborhood means are 4-element fixed-order folds riding the same
     rank shuffle, and the final argmax is one source-keyed window. All
     doubles are in-order folds, so both engines agree bit-for-bit."""
-    from pyspark.sql import Window as W
-
     from flink_scala_spark.pipeline import guards
 
     emb = _emb(spark, sf_dir)
@@ -3701,53 +3753,7 @@ def q_bitext_mining_margin(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     A = similarity.flatten(emb.where(F.col("label") == 0), "a", "vec_a")
     B = similarity.flatten(emb.where(F.col("label") == 1), "b", "vec_b")
-    dot = F.lit(0.0)
-    for i in range(1, similarity.DIM + 1):
-        dot = dot + F.col(f"a{i}") * F.col(f"b{i}")
-    cos = dot / F.sqrt(F.col("ansq") * F.col("bnsq"))
-    pairs = A.crossJoin(F.broadcast(B)).select(
-        "vec_a", "vec_b", cos.alias("cosine")
-    )
-    wa = W.partitionBy("vec_a").orderBy(F.desc("cosine"), "vec_b")
-    wb = W.partitionBy("vec_b").orderBy(F.desc("cosine"), "vec_a")
-    ranked = pairs.withColumn("rnk_a", F.row_number().over(wa)).withColumn(
-        "rnk_b", F.row_number().over(wb)
-    )
-
-    def _mean_top(side: str) -> DataFrame:
-        rnk = f"rnk_{side[-1]}"
-        key = f"vec_{side[-1]}"
-        fold = F.aggregate(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct(rnk, "cosine"))),
-                lambda s: s["cosine"],
-            ),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        ) / _MINE_TOPK
-        return (
-            ranked.where(F.col(rnk) <= _MINE_TOPK)
-            .groupBy(key)
-            .agg(fold.alias(f"avg_{side[-1]}"))
-        )
-
-    scored = (
-        pairs.join(F.broadcast(_mean_top("avg_a")), "vec_a")
-        .join(F.broadcast(_mean_top("avg_b")), "vec_b")
-        .select(
-            "vec_a", "vec_b", "cosine",
-            (
-                (F.lit(2.0) * F.col("cosine"))
-                / (F.col("avg_a") + F.col("avg_b"))
-            ).alias("margin"),
-        )
-    )
-    wm = W.partitionBy("vec_a").orderBy(F.desc("margin"), "vec_b")
-    return (
-        scored.withColumn("r", F.row_number().over(wm))
-        .where((F.col("r") == 1) & (F.col("margin") >= _MINE_THRESHOLD))
-        .select("vec_a", "vec_b", "cosine", "margin")
-    )
+    return _margin_mine(A.crossJoin(F.broadcast(B)))
 
 
 # ---------------------------------------------------------------------------
@@ -3891,8 +3897,6 @@ def q_bitext_mining_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     join; everything downstream is identical to the exact variant.
     Both the bucketing and the margin arithmetic replay exactly in
     SQL."""
-    from pyspark.sql import Window as W
-
     emb = _emb(spark, sf_dir)
     A = similarity.with_bucket(
         similarity.flatten(emb.where(F.col("label") == 0), "a", "vec_a"),
@@ -3902,51 +3906,7 @@ def q_bitext_mining_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         similarity.flatten(emb.where(F.col("label") == 1), "b", "vec_b"),
         "b", n_planes=_MINE_PLANES,
     )
-    dot = F.lit(0.0)
-    for i in range(1, similarity.DIM + 1):
-        dot = dot + F.col(f"a{i}") * F.col(f"b{i}")
-    cos = dot / F.sqrt(F.col("ansq") * F.col("bnsq"))
-    pairs = A.join(B, "bucket").select("vec_a", "vec_b", cos.alias("cosine"))
-    wa = W.partitionBy("vec_a").orderBy(F.desc("cosine"), "vec_b")
-    wb = W.partitionBy("vec_b").orderBy(F.desc("cosine"), "vec_a")
-    ranked = pairs.withColumn("rnk_a", F.row_number().over(wa)).withColumn(
-        "rnk_b", F.row_number().over(wb)
-    )
-
-    def _mean_top(side: str) -> DataFrame:
-        rnk = f"rnk_{side}"
-        key = f"vec_{side}"
-        fold = F.aggregate(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct(rnk, "cosine"))),
-                lambda s: s["cosine"],
-            ),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        ) / _MINE_TOPK
-        return (
-            ranked.where(F.col(rnk) <= _MINE_TOPK)
-            .groupBy(key)
-            .agg(fold.alias(f"avg_{side}"))
-        )
-
-    scored = (
-        pairs.join(F.broadcast(_mean_top("a")), "vec_a")
-        .join(F.broadcast(_mean_top("b")), "vec_b")
-        .select(
-            "vec_a", "vec_b", "cosine",
-            (
-                (F.lit(2.0) * F.col("cosine"))
-                / (F.col("avg_a") + F.col("avg_b"))
-            ).alias("margin"),
-        )
-    )
-    wm = W.partitionBy("vec_a").orderBy(F.desc("margin"), "vec_b")
-    return (
-        scored.withColumn("r", F.row_number().over(wm))
-        .where((F.col("r") == 1) & (F.col("margin") >= _MINE_THRESHOLD))
-        .select("vec_a", "vec_b", "cosine", "margin")
-    )
+    return _margin_mine(A.join(B, "bucket"))
 
 
 # ---------------------------------------------------------------------------
@@ -4037,8 +3997,6 @@ def q_bitext_mining_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle by centroid). Margins are computed over the candidate set
     (as in X151); assignment, probing, and margin arithmetic all
     replay exactly in SQL."""
-    from pyspark.sql import Window as W
-
     emb = _emb(spark, sf_dir)
     cent = similarity.flatten(
         similarity.centroid_rows(emb, similarity.NUM_CENTROIDS),
@@ -4101,53 +4059,7 @@ def q_bitext_mining_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
             *[F.first(c).alias(c) for c in b_cols],
         )
     )
-    dot = F.lit(0.0)
-    for i in range(1, similarity.DIM + 1):
-        dot = dot + F.col(f"a{i}") * F.col(f"b{i}")
-    cos = dot / F.sqrt(F.col("ansq") * F.col("bnsq"))
-    pairs = a_asg.join(b_asg, ["bucket", "centroid_id"]).select(
-        "vec_a", "vec_b", cos.alias("cosine")
-    )
-    wa = W.partitionBy("vec_a").orderBy(F.desc("cosine"), "vec_b")
-    wb = W.partitionBy("vec_b").orderBy(F.desc("cosine"), "vec_a")
-    ranked = pairs.withColumn("rnk_a", F.row_number().over(wa)).withColumn(
-        "rnk_b", F.row_number().over(wb)
-    )
-
-    def _mean_top(side: str) -> DataFrame:
-        rnk = f"rnk_{side}"
-        key = f"vec_{side}"
-        fold = F.aggregate(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct(rnk, "cosine"))),
-                lambda s: s["cosine"],
-            ),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        ) / _MINE_TOPK
-        return (
-            ranked.where(F.col(rnk) <= _MINE_TOPK)
-            .groupBy(key)
-            .agg(fold.alias(f"avg_{side}"))
-        )
-
-    scored = (
-        pairs.join(F.broadcast(_mean_top("a")), "vec_a")
-        .join(F.broadcast(_mean_top("b")), "vec_b")
-        .select(
-            "vec_a", "vec_b", "cosine",
-            (
-                (F.lit(2.0) * F.col("cosine"))
-                / (F.col("avg_a") + F.col("avg_b"))
-            ).alias("margin"),
-        )
-    )
-    wm = W.partitionBy("vec_a").orderBy(F.desc("margin"), "vec_b")
-    return (
-        scored.withColumn("r", F.row_number().over(wm))
-        .where((F.col("r") == 1) & (F.col("margin") >= _MINE_THRESHOLD))
-        .select("vec_a", "vec_b", "cosine", "margin")
-    )
+    return _margin_mine(a_asg.join(b_asg, ["bucket", "centroid_id"]))
 
 
 # ---------------------------------------------------------------------------
@@ -4182,7 +4094,7 @@ _OUT_K = 3  # sigma threshold
                 THEN 1 ELSE 0 END AS INT) AS is_outlier
     FROM per_doc p JOIN stats st USING (lang, source)
     """,
-    "curation", "quality", "outlier",
+    "curation", "quality", "outlier", "bench",
 )
 def q_length_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-(lang, source) 3-sigma token-length outlier flags — the
@@ -4261,7 +4173,7 @@ def q_length_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
                  ELSE 0.0 END) >= 0.3 AS is_boilerplate
     FROM documents d LEFT JOIN per p ON p.doc_id = d.doc_id
     """,
-    "text", "quality", "boilerplate",
+    "text", "quality", "boilerplate", "bench",
 )
 def q_boilerplate_shingle_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     """C4/CCNet-style boilerplate detection at word-shingle granularity
@@ -4289,7 +4201,7 @@ def q_boilerplate_shingle_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM tok t LEFT JOIN vocab v ON v.word = t.word
     GROUP BY 1
     """,
-    "text", "tokenizer", "audit",
+    "text", "tokenizer", "audit", "bench",
 )
 def q_vocab_oov_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tokenizer-vocabulary coverage audit (X162): top-100 corpus
@@ -4324,7 +4236,7 @@ def q_vocab_oov_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
            r.keep_ppm, CAST(coalesce(k.n_kept, 0) AS BIGINT) AS n_kept
     FROM rates r LEFT JOIN kept k ON r.source = k.source
     """,
-    "sampling", "mixture", "temperature",
+    "sampling", "mixture", "temperature", "bench",
 )
 def q_temperature_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Temperature-scaled source rebalancing (X163), the mT5/XLM-R
@@ -4381,7 +4293,7 @@ def _bpe_iter_w(it: int) -> str:
     FROM tok JOIN wlen wl ON wl.word = tok.word
     GROUP BY 1
     """,
-    "text", "tokenizer", "iterative",
+    "text", "tokenizer", "iterative", "bench",
 )
 def q_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tokenizer fertility report (X164): learn 3 BPE merges over the
@@ -4409,7 +4321,7 @@ def q_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY priority DESC, doc_id
     LIMIT 100
     """,
-    "sampling", "curation",
+    "sampling", "curation", "bench",
 )
 def q_weighted_corpus_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Weighted sampling without replacement (X171): 100 documents
@@ -4502,7 +4414,7 @@ def _mmr_final_sql(k_select: int) -> str:
     {_mmr_steps_sql(_MMR_K)}
     {_mmr_final_sql(_MMR_K)}
     """,
-    "similarity", "retrieval", "rerank",
+    "similarity", "retrieval", "rerank", "bench",
 )
 def q_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Maximal-Marginal-Relevance diversity rerank (X172): from each
@@ -4658,7 +4570,7 @@ def q_negative_pool_sampler(spark: SparkSession, sf_dir: str) -> DataFrame:
            (p_cur - p_base) * (p_cur - p_base) / p_base AS chi2_term
     FROM r
     """,
-    "quality", "monitoring", "drift",
+    "quality", "monitoring", "drift", "bench",
 )
 def q_distribution_drift_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distribution-drift monitor (X173): per-bin rate shift of the
@@ -4839,7 +4751,7 @@ def q_value_winsorized_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(sum(quality) AS BIGINT) AS sum_quality
     FROM u GROUP BY 1
     """,
-    "maintenance", "schema-evolution",
+    "maintenance", "schema-evolution", "bench",
 )
 def q_schema_evolution_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Schema-evolution roundtrip (X175): a v1 snapshot written WITHOUT
@@ -4928,7 +4840,7 @@ def _kmv_est_sql(n: str, hk: str) -> str:
              * ({_kmv_est_sql('n_u', 'hk_u')}) AS kmv_intersection
     FROM ex CROSS JOIN ska CROSS JOIN skb CROSS JOIN sku
     """,
-    "sketch", "kmv", "set-algebra",
+    "sketch", "kmv", "set-algebra", "bench",
 )
 def q_sketch_set_cardinality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """KMV sketch set algebra (X177): distinct-shingle cardinalities of
@@ -4989,7 +4901,7 @@ def q_sketch_set_cardinality(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(max(len_s) AS BIGINT) AS max_island_s
     FROM islands GROUP BY 1
     """,
-    "session", "intervals", "coverage",
+    "session", "intervals", "coverage", "bench",
 )
 def q_interval_union_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-user active wall-clock via interval-union merge (X186): each
@@ -5040,7 +4952,7 @@ def q_interval_union_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM winner JOIN q USING (query_id)
     GROUP BY 1
     """,
-    "similarity", "ann", "quality", "audit",
+    "similarity", "ann", "quality", "audit", "bench",
 )
 def q_knn_label_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """kNN label-agreement audit (X187): majority label of each query's
@@ -5085,7 +4997,7 @@ def q_knn_label_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
            END AS mean_nsq_ppm
     FROM per GROUP BY 1
     """,
-    "similarity", "quality", "audit",
+    "similarity", "quality", "audit", "bench",
 )
 def q_embedding_health_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Degenerate-vector pre-flight audit (X188): per label — all-zero
@@ -5120,7 +5032,7 @@ def q_embedding_health_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM g a JOIN g b ON b.prefix_h = a.suffix_h
      AND (a.doc_id <> b.doc_id OR a.chunk_idx <> b.chunk_idx)
     """,
-    "dedup", "provenance", "stitch",
+    "dedup", "provenance", "stitch", "bench",
 )
 def q_chunk_stitch_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Chunk-stitch candidate pairs (X189): unit_a's LAST 10 words equal
@@ -5195,7 +5107,7 @@ def q_chunk_stitch_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
                 AS BIGINT) AS skew_ppm
     FROM tot t JOIN p99 p ON p.B = t.B
     """,
-    "ops", "planning", "skew",
+    "ops", "planning", "skew", "bench",
 )
 def q_shuffle_skew_planner(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Shuffle-skew planner (X191): for candidate shuffle widths
@@ -5298,7 +5210,7 @@ def q_shuffle_skew_planner(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM cls CROSS JOIN thr
     GROUP BY 1
     """,
-    "governance", "privacy", "audit",
+    "governance", "privacy", "audit", "bench",
 )
 def q_k_anonymity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """k-anonymity audit (X194) — the re-identification risk report a
@@ -5361,7 +5273,7 @@ def q_k_anonymity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
            k.sum_kept_ids
     FROM before b JOIN kept k USING (event_type)
     """,
-    "governance", "privacy", "maintenance",
+    "governance", "privacy", "maintenance", "bench",
 )
 def q_right_to_erasure_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Right-to-erasure roundtrip (X195): physically DELETE every row
@@ -5509,7 +5421,7 @@ def q_lsh_parameter_planner(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(coalesce(sum(prod_ppm), 0) AS BIGINT) AS sum_prod_ppm
     FROM p GROUP BY 1, 2
     """,
-    "similarity", "statistics", "covariance",
+    "similarity", "statistics", "covariance", "bench",
 )
 def q_embedding_covariance_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact second-moment (Gram) report over the embedding corpus
@@ -5577,7 +5489,7 @@ def q_embedding_covariance_report(spark: SparkSession, sf_dir: str) -> DataFrame
     WINDOW w AS (PARTITION BY user_id
                  ORDER BY CAST(floor(epoch(ts)) AS BIGINT), event_id)
     """,
-    "features", "sequence", "lag",
+    "features", "sequence", "lag", "bench",
 )
 def q_event_lag_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-event lag features (X199) — the feature-engineering
@@ -5633,7 +5545,7 @@ def q_event_lag_features(spark: SparkSession, sf_dir: str) -> DataFrame:
                 AS BIGINT) AS share_ppm
     FROM t JOIN tot USING (prev_type)
     """,
-    "behavior", "markov", "sequence",
+    "behavior", "markov", "sequence", "bench",
 )
 def q_user_transition_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """First-order behavior transition matrix (X202): consecutive
@@ -5694,7 +5606,7 @@ from flink_scala_spark.queries.catalog import ROLLING_UD_SQL as _ROLLING_UD  # n
     SELECT CAST(roll.td * 86400 AS BIGINT) AS day_s, one.users_1d, roll.users_7d
     FROM roll JOIN one ON one.d = roll.td
     """,
-    "analytics", "sliding-distinct",
+    "analytics", "sliding-distinct", "bench",
 )
 def q_rolling_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Rolling 7-day distinct active users per day (X204): the exact
@@ -5726,7 +5638,7 @@ def q_rolling_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
            TRUE AS estimate_within_5pct
     FROM roll
     """,
-    "analytics", "sliding-distinct", "sketch",
+    "analytics", "sliding-distinct", "sketch", "bench",
 )
 def q_rolling_distinct_users_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X204 at sketch cost (X205): one corpus scan builds a fixed-size
@@ -5781,7 +5693,7 @@ def q_rolling_distinct_users_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
            END AS intercept_cents
     FROM st
     """,
-    "analytics", "regression", "trend",
+    "analytics", "regression", "trend", "bench",
 )
 def q_value_trend_ols(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distributed OLS (X206): per-type linear trend of the daily mean
@@ -5838,7 +5750,7 @@ def q_value_trend_ols(spark: SparkSession, sf_dir: str) -> DataFrame:
              AS chars_delta
     FROM j GROUP BY 1
     """,
-    "data-management", "snapshot-diff",
+    "data-management", "snapshot-diff", "bench",
 )
 def q_snapshot_diff_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Snapshot version diff (X208): two table versions staged to
@@ -5941,7 +5853,7 @@ def q_snapshot_diff_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
            TRUE AS within_mg_bound
     FROM r CROSS JOIN t WHERE rank <= {sampling.MG_TOPN}
     """,
-    "sketch", "heavy-hitters", "topk", "text",
+    "sketch", "heavy-hitters", "topk", "text", "bench",
 )
 def q_spacesaving_topk_certified(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SpaceSaving/Misra-Gries heavy-hitter top-N with its guarantee
@@ -5986,7 +5898,7 @@ def q_spacesaving_topk_certified(spark: SparkSession, sf_dir: str) -> DataFrame:
                 // nullif(base.dow_mean_cents, 0) > 1000000 AS is_anomaly
     FROM daily JOIN base ON (daily.d + 4) % 7 = base.dow
     """,
-    "analytics", "seasonality", "anomaly",
+    "analytics", "seasonality", "anomaly", "bench",
 )
 def q_revenue_dow_seasonality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Day-of-week seasonality + residual anomaly report (X214, round
@@ -6040,7 +5952,7 @@ def q_revenue_dow_seasonality(spark: SparkSession, sf_dir: str) -> DataFrame:
            END AS r1
     FROM st
     """,
-    "analytics", "regression", "trend",
+    "analytics", "regression", "trend", "bench",
 )
 def q_revenue_autocorr_lag1(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Lag-1 autocorrelation of daily revenue (X215, round 11; pairs
@@ -6117,7 +6029,7 @@ def q_revenue_autocorr_lag1(spark: SparkSession, sf_dir: str) -> DataFrame:
     JOIN g g75 ON g75.cents = px.p75_cents
     JOIN mean_t ON mean_t.event_type = px.event_type
     """,
-    "analytics", "quantile", "normalization",
+    "analytics", "quantile", "normalization", "bench",
 )
 def q_cross_type_quantile_norm(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cross-type quantile normalization (X216, round 11): each event

@@ -58,7 +58,7 @@ def _rev_col() -> F.Column:
                     AND l.l_shipdate > o.o_orderdate)
     GROUP BY o_orderpriority
     """,
-    "relational", "semi-join",
+    "relational", "semi-join", "bench",
 )
 def q_order_priority_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q4 shape: EXISTS as a LEFT SEMI join (no row multiplication —
@@ -85,7 +85,7 @@ def q_order_priority_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         GROUP BY c.c_custkey
     ) t GROUP BY c_count
     """,
-    "relational", "outer-join",
+    "relational", "outer-join", "bench",
 )
 def q_customer_order_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q13 shape: customers-per-order-count histogram. LEFT OUTER join
@@ -152,7 +152,7 @@ def q_top_supplier_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     JOIN part p ON p.p_partkey = u.l_partkey
     GROUP BY u.l_partkey, p.p_name, b.min_cost
     """,
-    "relational", "correlated-min",
+    "relational", "correlated-min", "bench",
 )
 def q_min_cost_supplier_per_part(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q2 shape (adapted: unit cost from lineitem, no partsupp table):
@@ -199,7 +199,7 @@ def q_min_cost_supplier_per_part(spark: SparkSession, sf_dir: str) -> DataFrame:
     JOIN nation n ON c.c_nationkey = n.n_nationkey
     GROUP BY CUBE (n.n_name, year(o.o_orderdate))
     """,
-    "relational", "cube",
+    "relational", "cube", "bench",
 )
 def q_revenue_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CUBE over (nation, order year): all four grouping sets — the
@@ -278,7 +278,7 @@ def q_promo_revenue_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY returned_revenue DESC, c_custkey
     LIMIT 20
     """,
-    "relational", "topk",
+    "relational", "topk", "bench",
 )
 def q_returned_revenue_top_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q10 shape: who returned the most revenue. The returnflag filter
@@ -317,7 +317,7 @@ def q_returned_revenue_top_customers(spark: SparkSession, sf_dir: str) -> DataFr
     WHERE sn.n_name <> cn.n_name
     GROUP BY sn.n_name, cn.n_name, year(o.o_orderdate)
     """,
-    "relational", "multi-join",
+    "relational", "multi-join", "bench",
 )
 def q_nation_trade_flow(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q7 shape: cross-nation trade volume. Six-table join where the
@@ -1132,7 +1132,7 @@ def q_part_supplier_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
       ON a.ts >= e.ts - INTERVAL 6 HOUR AND a.ts <= e.ts
     GROUP BY 1
     """,
-    "join", "range", "scale",
+    "join", "range", "scale", "bench",
 )
 def q_range_join_binned(spark: SparkSession, sf_dir: str) -> DataFrame:
     """KEYLESS range correlation: for each error event, how many
@@ -1164,7 +1164,7 @@ def q_range_join_binned(spark: SparkSession, sf_dir: str) -> DataFrame:
                          WHERE o_orderpriority = '1-URGENT')
     GROUP BY 1
     """,
-    "join", "semi", "scale", "bloom",
+    "join", "semi", "scale", "bloom", "bench",
 )
 def q_bloom_semi_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Runtime bloom-filter semi join (X169): revenue of lineitems
@@ -1209,7 +1209,7 @@ def q_bloom_semi_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE p.p_size = pm.gmax
       AND (pm.prevmax IS NULL OR p.p_size > pm.prevmax)
     """,
-    "skyline", "analytics",
+    "skyline", "analytics", "bench",
 )
 def q_pareto_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """2-D skyline (X170): the Pareto frontier of parts minimizing
@@ -1242,7 +1242,7 @@ def q_pareto_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
     JOIN nation n ON c.c_nationkey = n.n_nationkey
     GROUP BY GROUPING SETS ((n.n_name), (year(o.o_orderdate)))
     """,
-    "relational", "grouping-sets",
+    "relational", "grouping-sets", "bench",
 )
 def q_revenue_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Explicit GROUPING SETS (X174): BOTH one-dimension margins —
@@ -1313,7 +1313,7 @@ def q_revenue_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
                 AS INT) AS dev_rank
     FROM cs
     """,
-    "analytics", "changepoint", "timeseries",
+    "analytics", "changepoint", "timeseries", "bench",
 )
 def q_revenue_cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CUSUM changepoint scan (X190): daily revenue in exact cents
@@ -1368,7 +1368,7 @@ def q_revenue_cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM v_new n LEFT JOIN v_old o ON o.c_nationkey = n.c_nationkey
     WHERE n.cnt - COALESCE(o.cnt, 0) > 0
     """,
-    "maintenance", "ivm", "join",
+    "maintenance", "ivm", "join", "bench",
 )
 def q_incremental_join_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental view maintenance for a JOIN view (X192) — the
@@ -1433,7 +1433,7 @@ def q_incremental_join_maintenance(spark: SparkSession, sf_dir: str) -> DataFram
            CAST(count(nb) AS BIGINT) AS keys_b
     FROM f
     """,
-    "ops", "planning", "join",
+    "ops", "planning", "join", "bench",
 )
 def q_join_cardinality_planner(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Join-cardinality planner (X197): the EXACT output size of
@@ -1490,7 +1490,7 @@ _PLANNER_B_SQL = (
 @register(
     "join_size_kmv_certified",
     _sampling.kmv_join_size_oracle_sql(_PLANNER_A_SQL, _PLANNER_B_SQL, duck_h60),
-    "sketch", "kmv", "planning", "join",
+    "sketch", "kmv", "planning", "join", "bench",
 )
 def q_join_size_kmv_certified(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Join-size estimate at sketch cost (X217): X197's planner
@@ -1545,7 +1545,7 @@ def q_join_size_kmv_certified(spark: SparkSession, sf_dir: str) -> DataFrame:
              AS cum_cents
     FROM cell
     """,
-    "analytics", "cohort", "ltv",
+    "analytics", "cohort", "ltv", "bench",
 )
 def q_customer_ltv_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Customer-LTV cohort curves (X200): customers grouped by
@@ -1662,7 +1662,7 @@ def _rfm_thresholds(metric: str) -> str:
            CAST(sum(monetary) AS BIGINT) AS sum_cents
     FROM seg GROUP BY 1, 2, 3
     """,
-    "analytics", "segmentation", "rfm",
+    "analytics", "segmentation", "rfm", "bench",
 )
 def q_customer_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RFM segmentation (X203): per customer — recency (days since
@@ -1794,7 +1794,7 @@ def q_customer_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE p.p_name LIKE '%red%'
     GROUP BY 1, 2
     """,
-    "relational", "q9",
+    "relational", "q9", "bench",
 )
 def q_product_type_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q9 shape (adapted: no partsupp table in the driver testdata, so
@@ -1847,7 +1847,7 @@ def q_product_type_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
       JOIN orders o ON o.o_orderkey = q.l_orderkey
       JOIN customer c ON c.c_custkey = o.o_custkey
     """,
-    "relational", "q18",
+    "relational", "q18", "bench",
 )
 def q_large_volume_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q18 shape: customers who placed very-large-volume orders
@@ -1915,7 +1915,7 @@ def q_large_volume_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(stp * 1000000 // t AS BIGINT) AS top_decile_share_ppm
     FROM tot
     """,
-    "analytics", "concentration", "gini",
+    "analytics", "concentration", "gini", "bench",
 )
 def q_revenue_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Revenue concentration (X207): exact Gini coefficient and

@@ -16,6 +16,26 @@ import os
 from pyspark.sql import SparkSession
 
 
+#: Runtime SQL confs of every session the engine runs on: ``get_spark``
+#: builds with them and ``tune_existing`` sets them on a session it did
+#: not build, so the two cannot drift apart.
+SQL_CONFS = {
+    "spark.sql.adaptive.enabled": "true",
+    "spark.sql.adaptive.coalescePartitions.enabled": "true",
+    "spark.sql.adaptive.skewJoin.enabled": "true",
+    "spark.sql.session.timeZone": "UTC",
+    "spark.sql.execution.arrow.pyspark.enabled": "true",
+    "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
+    # flattened-embedding pair joins carry 2x(64+2) columns; the
+    # default maxFields=100 silently drops those stages out of
+    # whole-stage codegen (~3x slower scoring)
+    "spark.sql.codegen.maxFields": "256",
+    # the bounded runner sums q.recentProgress, which Spark caps at
+    # this many reports (default 100): keep every report of a replay
+    "spark.sql.streaming.numRecentProgressUpdates": "10000",
+}
+
+
 def get_spark(app_name: str = "flink_scala_spark", cpus: int | None = None) -> SparkSession:
     """Build (or fetch) the tuned SparkSession.
 
@@ -26,22 +46,10 @@ def get_spark(app_name: str = "flink_scala_spark", cpus: int | None = None) -> S
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
+        .config(map=SQL_CONFS)
         .config("spark.sql.shuffle.partitions", str(cpus))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
         .config("spark.ui.enabled", "false")
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        # flattened-embedding pair joins carry 2x(64+2) columns; the
-        # default maxFields=100 silently drops those stages out of
-        # whole-stage codegen (~3x slower scoring)
-        .config("spark.sql.codegen.maxFields", "256")
-        # the bounded runner sums q.recentProgress, which Spark caps at
-        # this many reports (default 100): keep every report of a replay
-        .config("spark.sql.streaming.numRecentProgressUpdates", "10000")
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
@@ -83,15 +91,7 @@ def tune_existing(spark: SparkSession) -> SparkSession:
     The driver harness passes us its own SparkSession; static configs
     (master, memory) are fixed by then, but SQL confs still apply.
     """
-    for k, v in (
-        ("spark.sql.session.timeZone", "UTC"),
-        ("spark.sql.adaptive.enabled", "true"),
-        ("spark.sql.adaptive.coalescePartitions.enabled", "true"),
-        ("spark.sql.adaptive.skewJoin.enabled", "true"),
-        ("spark.sql.execution.arrow.pyspark.enabled", "true"),
-        ("spark.sql.codegen.maxFields", "256"),
-        ("spark.sql.streaming.numRecentProgressUpdates", "10000"),
-    ):
+    for k, v in SQL_CONFS.items():
         try:
             spark.conf.set(k, v)
         except Exception:

@@ -19,6 +19,7 @@ from __future__ import annotations
 
 import itertools
 import math
+import threading
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
@@ -39,6 +40,13 @@ REPLAY_MIN_PARTITIONS = 4
 
 #: Seconds an ``availableNow`` run may take before it counts as hung.
 TIMEOUT_S = 600
+
+#: A query clones the session's conf when it starts and keeps its
+#: shuffle partitioning from then on, so a run's replay-sized
+#: ``spark.sql.shuffle.partitions`` is set only around ``start()``.
+#: Starts on one process are serialized, so an overlapping run never
+#: reads another run's temporary value as the one to put back.
+_START_LOCK = threading.Lock()
 
 
 @dataclass
@@ -107,26 +115,26 @@ def _run(
     w = w.foreachBatch(foreach) if foreach else w.format("memory")
     if available_now:
         w = w.trigger(availableNow=True)
-    with scoped_conf(spark, confs):
+    with _START_LOCK, scoped_conf(spark, confs):
         q = w.start()
+    try:
+        if available_now:
+            if not q.awaitTermination(TIMEOUT_S):
+                # a hung query would return a silently truncated
+                # table (timer emissions missing): fail loudly
+                raise TimeoutError(f"query {name} did not finish in {TIMEOUT_S}s")
+        else:
+            q.processAllAvailable()
+        progress = q.recentProgress
+        rec.input_rows += sum(int(p["numInputRows"]) for p in progress)
+        rec.batches += len(progress)
         try:
-            if available_now:
-                if not q.awaitTermination(TIMEOUT_S):
-                    # a hung query would return a silently truncated
-                    # table (timer emissions missing): fail loudly
-                    raise TimeoutError(f"query {name} did not finish in {TIMEOUT_S}s")
-            else:
-                q.processAllAvailable()
-            progress = q.recentProgress
-            rec.input_rows += sum(int(p["numInputRows"]) for p in progress)
-            rec.batches += len(progress)
-            try:
-                rec.plan = q._jsq.explainInternal(False)
-            except Exception:
-                rec.plan = None  # no JVM handle (Connect-style session)
-        finally:
-            q.stop()
-            q.awaitTermination(30)
+            rec.plan = q._jsq.explainInternal(False)
+        except Exception:
+            rec.plan = None  # no JVM handle (Connect-style session)
+    finally:
+        q.stop()
+        q.awaitTermination(30)
     if foreach:
         return None
     out = spark.table(name)

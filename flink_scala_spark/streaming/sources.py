@@ -150,43 +150,17 @@ def file_replay_time_buckets(
     """
     from flink_scala_spark import tables
 
-    cache_key = ("time", sf_dir, table, bucket_seconds)
-    with _REPLAY_LOCK:
-        replay = _build_time_replay(spark, cache_key, sf_dir, table, bucket_seconds)
-    _note_replay(replay)
-    schema = spark.read.parquet(replay).schema
-    return (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(replay)
-    )
-
-
-def _build_time_replay(spark, cache_key, sf_dir, table, bucket_seconds):
-    from flink_scala_spark import tables
-
-    replay = _REPLAY_CACHE.get(cache_key)
-    if replay is None or not os.path.isdir(replay):
+    def bucketed() -> DataFrame:
         batch = tables.load(spark, sf_dir, table)
         if dict(batch.dtypes).get("ts") == "timestamp_ntz":
             # Watermarks (and unix_micros) need TIMESTAMP; with the session
             # pinned to UTC the cast is an exact identity on stored micros.
             batch = batch.withColumn("ts", F.col("ts").cast("timestamp"))
-        out = tempfile.mkdtemp(prefix=f"replay_{table}_")
-        staged = os.path.join(out, "staged")
-        (
-            batch.withColumn(
-                "bucket", F.expr(f"unix_micros(ts) DIV {bucket_seconds * 1_000_000}")
-            )
-            .repartition(1)  # one part file per bucket dir; testdata-sized
-            .write.partitionBy("bucket")
-            .mode("overwrite")
-            .parquet(staged)
+        return batch.withColumn(
+            "bucket", F.expr(f"unix_micros(ts) DIV {bucket_seconds * 1_000_000}")
         )
-        replay = _layout_replay_dir(staged, out)
-        shutil.rmtree(staged, ignore_errors=True)
-        _REPLAY_CACHE[cache_key] = replay
-    return replay
+
+    return _bucketed_replay(spark, ("time", sf_dir, table, bucket_seconds), bucketed)
 
 
 def file_replay_id_buckets(
@@ -202,9 +176,37 @@ def file_replay_id_buckets(
     bucket)."""
     from flink_scala_spark import tables
 
-    cache_key = ("id", sf_dir, table, id_col, n_buckets)
+    def bucketed() -> DataFrame:
+        batch = tables.load(spark, sf_dir, table)
+        max_id = batch.agg(F.max(id_col)).collect()[0][0]
+        width = (int(max_id) // n_buckets) + 1
+        return batch.withColumn("bucket", F.expr(f"{id_col} DIV {width}"))
+
+    return _bucketed_replay(
+        spark, ("id", sf_dir, table, id_col, n_buckets), bucketed
+    )
+
+
+def _bucketed_replay(spark: SparkSession, key: tuple, bucketed) -> DataFrame:
+    """Replay ``bucketed()`` (a table with an integer ``bucket``
+    column) one bucket per trigger. ``key`` is ``(kind, sf_dir, table,
+    *params)``; the replay dir is built once per key and process, under
+    ``_REPLAY_LOCK``, as one part file per bucket in bucket order."""
     with _REPLAY_LOCK:
-        replay = _build_id_replay(spark, cache_key, sf_dir, table, id_col, n_buckets)
+        replay = _REPLAY_CACHE.get(key)
+        if replay is None or not os.path.isdir(replay):
+            out = tempfile.mkdtemp(prefix=f"replay_{key[2]}_{key[0]}_")
+            staged = os.path.join(out, "staged")
+            (
+                bucketed()
+                .repartition(1)  # one part file per bucket dir; testdata-sized
+                .write.partitionBy("bucket")
+                .mode("overwrite")
+                .parquet(staged)
+            )
+            replay = _layout_replay_dir(staged, out)
+            shutil.rmtree(staged, ignore_errors=True)
+            _REPLAY_CACHE[key] = replay
     _note_replay(replay)
     schema = spark.read.parquet(replay).schema
     return (
@@ -212,29 +214,6 @@ def file_replay_id_buckets(
         .option("maxFilesPerTrigger", "1")
         .parquet(replay)
     )
-
-
-def _build_id_replay(spark, cache_key, sf_dir, table, id_col, n_buckets):
-    from flink_scala_spark import tables
-
-    replay = _REPLAY_CACHE.get(cache_key)
-    if replay is None or not os.path.isdir(replay):
-        batch = tables.load(spark, sf_dir, table)
-        max_id = batch.agg(F.max(id_col)).collect()[0][0]
-        width = (int(max_id) // n_buckets) + 1
-        out = tempfile.mkdtemp(prefix=f"replay_{table}_id_")
-        staged = os.path.join(out, "staged")
-        (
-            batch.withColumn("bucket", F.expr(f"{id_col} DIV {width}"))
-            .repartition(1)
-            .write.partitionBy("bucket")
-            .mode("overwrite")
-            .parquet(staged)
-        )
-        replay = _layout_replay_dir(staged, out)
-        shutil.rmtree(staged, ignore_errors=True)
-        _REPLAY_CACHE[cache_key] = replay
-    return replay
 
 
 def socket_lines(spark: SparkSession, host: str = "localhost", port: int = 7777) -> DataFrame:

@@ -39,6 +39,64 @@ def test_concurrent_queries_match_serial(spark, sf_dir):
         assert concurrent[n] == serial[n], n
 
 
+def test_overlapping_bounded_runs_keep_session_shuffle_conf(
+    spark, sf_dir, monkeypatch
+):
+    """Two bounded replays that overlap on one session leave its
+    spark.sql.shuffle.partitions as it was. Each run sizes its shuffle
+    from its replay bytes; the stream keeps the partitioning it started
+    with, so the temporary value may only be set around start(). The
+    runs are interleaved deterministically: the first run waits inside
+    processAllAvailable until the second is processing, and the second
+    waits there until the first has returned, so the second run starts
+    while the first is live and finishes last."""
+    import threading
+    import time
+
+    from pyspark.sql.streaming.query import StreamingQuery
+
+    from flink_scala_spark.queries import catalog
+
+    first, second = "streaming_keyed_sum", "streaming_word_count"
+    key = "spark.sql.shuffle.partitions"
+    second_live = threading.Event()
+    first_done = threading.Event()
+    process = StreamingQuery.processAllAvailable
+
+    def ordered_process(q):
+        out = process(q)
+        if catalog.current_query() == first:
+            assert second_live.wait(120), "second run never started"
+        elif catalog.current_query() == second:
+            second_live.set()
+            assert first_done.wait(120), "first run never returned"
+        return out
+
+    def run_first():
+        try:
+            return _run(spark, sf_dir, first)
+        finally:
+            first_done.set()
+
+    serial = {n: _run(spark, sf_dir, n) for n in (first, second)}
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "13")
+    monkeypatch.setattr(StreamingQuery, "processAllAvailable", ordered_process)
+    try:
+        with ThreadPoolExecutor(max_workers=2) as pool:
+            f1 = pool.submit(run_first)
+            deadline = time.time() + 120
+            while not spark.streams.active and not f1.done():
+                assert time.time() < deadline, "first run never started"
+                time.sleep(0.01)
+            f2 = pool.submit(_run, spark, sf_dir, second)
+            got = {first: f1.result(timeout=600), second: f2.result(timeout=600)}
+        assert spark.conf.get(key) == "13"
+    finally:
+        spark.conf.set(key, prev)
+    assert got == serial
+
+
 def test_worker_package_import_from_foreign_cwd(tmp_path, sf_dir):
     """The driver harness may run from ANY cwd with only its own
     sys.path patched; Python workers un-pickle module-level stateful
@@ -190,9 +248,10 @@ def test_compare_bench_recovers_streaming_wrapper_tails(tmp_path):
     instead of harvesting the inner metric keys as query names, and
     still parse flat bench.py-format tails."""
     import json
+    import os
     import sys
 
-    sys.path.insert(0, "/root/repo/tools")
+    sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "tools"))
     try:
         from compare_bench import load_timings
     finally:

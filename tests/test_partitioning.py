@@ -194,20 +194,25 @@ def test_replay_partition_conf_restored_after_bounded_run(spark, sf_dir):
     bytes its source noted and then put the session value BACK — the
     driver gate and bench share one session across streaming and batch
     queries, so a leak would repartition every subsequent batch plan."""
+    from flink_scala_spark.session import scoped_conf
     from flink_scala_spark.streaming import runner, sources
 
     runner.RUNS.pop(None, None)
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    key = "spark.sql.shuffle.partitions"
     src = sources.file_replay_time_buckets(spark, sf_dir, "events", 86400)
     nbytes = runner.RUNS[None].replay_bytes
     assert nbytes > 0, "replay source must record its size"
-    out = runner.run_bounded(
-        src.groupBy("event_type").count(), "complete"
-    )
+    # a session value unlike the replay size, so a leak would show
+    with scoped_conf(spark, {key: "13"}):
+        out = runner.run_bounded(
+            src.groupBy("event_type").count(), "complete"
+        )
+        assert spark.conf.get(key) == "13"
     assert out.count() > 0
     rec = runner.RUNS[None]
     assert rec.partitions == runner.replay_partitions(
         nbytes, spark.sparkContext.defaultParallelism
     )
     assert rec.replay_bytes == 0, "the run must consume its size note"
-    assert spark.conf.get("spark.sql.shuffle.partitions") == prev
+    # the conf is only set around start(); the live stream keeps it
+    assert f"numPartitions = {rec.partitions}" in rec.plan

@@ -799,11 +799,11 @@ def test_plan_allowlists_contain_only_live_catalog_entries():
         KEY_SKEW_WINDOW_OK - set(QUERIES)
     )
     # bench.py has the same silent-filter failure mode: a typo'd
-    # HEADLINE name would just drop that query from the benchmark
+    # R1_RECORDED name would just lose its stdout spill priority
     import bench
 
-    assert set(bench.HEADLINE) <= set(QUERIES), sorted(
-        set(bench.HEADLINE) - set(QUERIES)
+    assert set(bench.R1_RECORDED) <= set(QUERIES), sorted(
+        set(bench.R1_RECORDED) - set(QUERIES)
     )
 
 

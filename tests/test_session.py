@@ -6,17 +6,23 @@ from __future__ import annotations
 def test_session_keeps_every_progress_report(spark):
     """The bounded runner sums q.recentProgress; the tuned session keeps
     far more reports than Spark's 100, so a long replay is not
-    undercounted."""
-    from flink_scala_spark.session import tune_existing
+    undercounted. ``tune_existing`` puts back every conf of
+    ``SQL_CONFS`` on a session that lost them, so the driver's session
+    plans like the one ``get_spark`` builds."""
+    from flink_scala_spark.session import SQL_CONFS, tune_existing
 
     key = "spark.sql.streaming.numRecentProgressUpdates"
     assert spark.conf.get(key) == "10000"
-    spark.conf.set(key, "100")
+    assert {k: spark.conf.get(k) for k in SQL_CONFS} == SQL_CONFS
     try:
+        for k in SQL_CONFS:
+            spark.conf.unset(k)
+        assert spark.conf.get(key) != "10000"
         tune_existing(spark)
-        assert spark.conf.get(key) == "10000"
+        assert {k: spark.conf.get(k) for k in SQL_CONFS} == SQL_CONFS
     finally:
-        spark.conf.set(key, "10000")
+        for k, v in SQL_CONFS.items():
+            spark.conf.set(k, v)
 
 
 def test_scoped_conf_restores_set_and_unset_values(spark):

@@ -1,8 +1,9 @@
-"""Dump .explain("formatted") for headline queries to plans/<outdir>/.
+"""Dump .explain("formatted") for bench entries to plans/<outdir>/.
 
 Usage: python tools/dump_plans.py <outdir-under-plans> [query ...]
-Defaults to every bench headline entry. Driver-side planning only — no
-jobs are executed, so this is safe to run next to other work.
+Defaults to ``bench.entries()``, the catalog entries tagged ``bench``.
+Driver-side planning only — no jobs are executed, so this is safe to
+run next to other work.
 """
 
 from __future__ import annotations
@@ -24,14 +25,7 @@ def main() -> None:
     from flink_scala_spark.queries import catalog
     from flink_scala_spark.session import get_spark
 
-    names = sys.argv[2:]
-    if not names:
-        names = [n for n in bench.HEADLINE if n in catalog.QUERIES]
-        names += [
-            n
-            for n in catalog.QUERIES
-            if n not in names and "bench" in catalog.QUERIES[n].tags
-        ]
+    names = sys.argv[2:] or bench.entries()
 
     spark = get_spark("dump_plans")
     mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(

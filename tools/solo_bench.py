@@ -1,19 +1,16 @@
-"""Time individual headline queries with bench.py's exact methodology
-(per-query sf0.001 warmup, then best-of-N noop-sink writes at
-$SPARK_GRAFT_SF_DIR from a cold data cache — guide §1.4; round 13
-re-based the timed action from `.count()` alongside bench.py) without
-running the whole headline set.
+"""Time individual bench entries with bench.py's timed pass
+(``bench.time_entry``: per-query sf0.001 warmup, then best-of-
+``MEASURE_RUNS`` noop-sink writes at $SPARK_GRAFT_SF_DIR from a cold
+data cache) without running the whole bench set.
 
 Usage: python tools/solo_bench.py <query> [query ...]
 """
 
 from __future__ import annotations
 
-import gc
 import json
 import os
 import sys
-import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
@@ -21,43 +18,12 @@ sys.path.insert(0, REPO)
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    warm_dir = "/root/testdata/sf0.001"
-    runs = max(1, int(os.environ.get("MEASURE_RUNS", "2")))
 
-    from flink_scala_spark.queries import catalog
+    import bench
     from flink_scala_spark.session import get_spark
 
     spark = get_spark("solo_bench")
-    timings: dict[str, float] = {}
-    for name in sys.argv[1:]:
-        fn = catalog.QUERIES[name].fn
-        spark.sparkContext.setJobDescription(f"warmup:{name}")
-        if os.path.isdir(warm_dir):
-            try:
-                fn(spark, warm_dir).write.format("noop").mode(
-                    "overwrite"
-                ).save()
-            except Exception as e:
-                print(f"# warmup {name} failed: {e}", file=sys.stderr)
-        best, n = None, 0
-        for i in range(runs):
-            spark.catalog.clearCache()
-            spark.sparkContext.setJobDescription(f"measure:{name}:{i}")
-            t0 = time.time()
-            df = fn(spark, sf_dir)
-            from pyspark.sql import Observation
-            from pyspark.sql import functions as F
-
-            obs = Observation()
-            df = df.observe(obs, F.count(F.lit(1)).alias("n"))
-            df.write.format("noop").mode("overwrite").save()
-            n = obs.get["n"]
-            wall = time.time() - t0
-            best = wall if best is None else min(best, wall)
-            del df
-            gc.collect()
-        timings[name] = round(best, 3)
-        print(f"# {name}: {n} rows in {timings[name]:.3f}s", file=sys.stderr)
+    timings = {n: bench.time_entry(spark, n, sf_dir) for n in sys.argv[1:]}
     print(json.dumps(timings, separators=(",", ":")))
 
 
