@@ -820,84 +820,6 @@ def ivf_assign(
     )
 
 
-def ivf_topk(
-    emb: DataFrame,
-    query_pred,
-    k: int = 5,
-    nprobe: int = 4,
-    num_centroids: int = NUM_CENTROIDS,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """IVF-style ANN: a coarse quantizer partitions vectors into
-    inverted lists; queries probe only the ``nprobe`` nearest lists.
-
-    The quantizer is deterministic (:func:`centroid_rows` — the
-    ``num_centroids`` hash-first rows) instead of k-means-trained, so
-    the DuckDB oracle replays the identical index — the Spark plumbing
-    (assignment, probing, list-local scoring) is the real IVF shape.
-
-    Scale path: the centroid set is FIXED-SIZE (O(k·dim) memory,
-    independent of corpus size) and broadcast everywhere; assignment
-    is one map-side-combined ``max_by`` shuffle on vec_id; probes are
-    broadcast back so candidate generation never shuffles the big
-    table by centroid (no hot-list skew); scoring touches ~nprobe/C
-    of the pair space vs brute force.
-    """
-    cent = flatten(centroid_rows(emb, num_centroids, id_col, vec_col),
-                   "t", "centroid_id", id_col, vec_col)
-    base = spread(flatten(emb, "c", "neighbor_id", id_col, vec_col))
-    vec_cols = [f"c{i}" for i in range(1, DIM + 1)] + ["cnsq"]
-    # index build: nearest centroid per vector; max_by over
-    # (sim, -centroid_id) == "highest sim, lowest centroid id on ties".
-    # The vector's own flat columns ride through the agg as first()
-    # (constant within each neighbor_id group, the crossJoin replicates
-    # them per centroid) so the assigned table needs NO join back to
-    # base — one n-scale shuffle instead of two, and the crossJoin
-    # output combines map-side (all 64 centroid rows of a vector sit
-    # in its own partition).
-    asg = (
-        base.crossJoin(F.broadcast(cent))
-        .select("neighbor_id", "centroid_id", _flat_cosine("c", "t").alias("sim"),
-                *vec_cols)
-        .groupBy("neighbor_id")
-        .agg(
-            F.max_by(
-                "centroid_id", F.struct(F.col("sim"), -F.col("centroid_id"))
-            ).alias("centroid_id"),
-            *[F.first(c).alias(c) for c in vec_cols],
-        )
-    )
-    # query side: nprobe nearest centroids per query
-    q = flatten(emb.where(query_pred), "q", "query_id", id_col, vec_col)
-    from pyspark.sql import Window
-
-    pw = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("centroid_id"))
-    probes = (
-        q.crossJoin(F.broadcast(cent))
-        .select("query_id", "centroid_id", _flat_cosine("q", "t").alias("sim"))
-        .withColumn("r", F.row_number().over(pw))
-        .where(F.col("r") <= nprobe)
-        .select("query_id", "centroid_id")
-    )
-    # candidates: probed lists only; probes broadcast (tiny), the big
-    # side is never shuffled by centroid id (asg already carries the
-    # flat vector columns — no join back to base)
-    cand = (
-        asg.join(F.broadcast(probes), "centroid_id")
-        .where(F.col("neighbor_id") != F.col("query_id"))
-    )
-    scored = cand.join(F.broadcast(q), "query_id").select(
-        "query_id", "neighbor_id", _flat_cosine("q", "c").alias("cosine")
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
-
-
 def ivf_topk_vectorized(
     emb: DataFrame,
     query_pred,
@@ -911,8 +833,11 @@ def ivf_topk_vectorized(
     label_match: str | None = None,
     train_iters: int = 0,
 ) -> DataFrame:
-    """IVF-style ANN, Arrow+numpy path: bit-identical to
-    :func:`ivf_topk` without flat-column codegen.
+    """IVF-style ANN: a coarse quantizer partitions vectors into
+    inverted lists; queries probe only the ``nprobe`` nearest lists.
+    The quantizer is deterministic (:func:`centroid_rows` — the
+    ``num_centroids`` hash-first rows) unless ``train_iters`` trains it
+    (below), so the DuckDB oracle replays the identical index.
 
     With ``label_col`` set, candidates are filtered by label relative
     to the query row inside the list-local scoring stage:
@@ -947,6 +872,8 @@ def ivf_topk_vectorized(
     """
     import numpy as np
 
+    from flink_scala_spark.pipeline import guards
+
     if label_match not in (None, "same", "diff"):
         raise ValueError(f"label_match must be None/'same'/'diff', got {label_match!r}")
     if label_match is not None and label_col is None:
@@ -970,7 +897,11 @@ def ivf_topk_vectorized(
     use_labels = label_col is not None
     want_same = label_match == "same"
     q_sel = [id_col, vec_col] + ([label_col] if use_labels else [])
-    q_pdf = emb.where(query_pred).select(*q_sel).toPandas()
+    # the query side is small by contract: refuse past the bound before
+    # q_map is built, collecting at most bound+1 rows
+    bound = guards.MAX_REFERENCE_ROWS
+    q_pdf = emb.where(query_pred).select(*q_sel).limit(bound + 1).toPandas()
+    guards.guard_reference_rows(len(q_pdf), _current_entry_or("ivf_topk_vectorized"))
     q_map = {
         int(r[id_col]): (
             np.asarray(r[vec_col], dtype=np.float64),
@@ -2437,7 +2368,7 @@ def knn_label_agreement(
 
     Built on :func:`cosine_topk_vectorized` (exact path, guarded by
     MAX_EXACT_PAIRS — past the bound it refuses naming the IVF twin, so
-    the 100 TB path is kNN over `ivf_topk` candidates). Vote
+    the 100 TB path is kNN over `ivf_topk_vectorized` candidates). Vote
     tie-break: larger neighbor-count wins, then the SMALLER label — a
     total order, so the audit is partitioning-proof. The two label
     joins are against the (vec_id, label) projection of the corpus —

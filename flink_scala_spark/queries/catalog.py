@@ -1149,30 +1149,6 @@ def q_rising_streak_alarm(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def register_catalog_views(
-    spark: SparkSession, sf_dir: str, prefix: str = "q_"
-) -> list[str]:
-    """Expose every catalog operator as a SQL temp view ``q_<name>``
-    (plus the base tables), so the whole engine is usable from plain
-    ``spark.sql`` — compose operators in SQL exactly as a reference
-    user would compose DataStream stages.
-
-    Views are LAZY: registering costs nothing; each view's plan runs
-    (and re-optimizes end-to-end, filters pushing THROUGH the view)
-    only when queried. Streaming twins are excluded — they execute a
-    live query on build and belong to the streaming runner."""
-    from flink_scala_spark import tables
-
-    tables.register_views(spark, sf_dir)
-    names = []
-    for name, spec in QUERIES.items():
-        if name.startswith("streaming_"):
-            continue
-        spec.fn(spark, sf_dir).createOrReplaceTempView(prefix + name)
-        names.append(prefix + name)
-    return names
-
-
 @register(
     "count_window_sum",
     """

@@ -2108,15 +2108,15 @@ def q_udtf_bigram_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from flink_scala_spark.functions.udx import BigramUDTF
 
     spark.udtf.register("bigrams_udtf", BigramUDTF)
-    _docs(spark, sf_dir).createOrReplaceTempView("_udtf_docs")
     return spark.sql(
         """
         SELECT b.bigram, count(*) AS cnt
-        FROM _udtf_docs d, LATERAL bigrams_udtf(d.text) b
+        FROM {docs} d, LATERAL bigrams_udtf(d.text) b
         GROUP BY b.bigram
         ORDER BY cnt DESC, b.bigram
         LIMIT 20
-        """
+        """,
+        docs=_docs(spark, sf_dir),
     )
 
 

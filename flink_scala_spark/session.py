@@ -36,10 +36,23 @@ SQL_CONFS = {
 }
 
 
+def _half_memory() -> str:
+    """Half the host's physical memory, in whole gigabytes (at least 1).
+
+    G1 grows the heap towards its maximum before it collects the old
+    generation, so a heap sized past the machine gets the JVM killed:
+    at a 48g default the kernel's OOM killer took the test suite's JVM
+    at 15-16 GB resident on a 15.7 GB host."""
+    mem = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{max(1, mem // 2**31)}g"
+
+
 def get_spark(app_name: str = "flink_scala_spark", cpus: int | None = None) -> SparkSession:
     """Build (or fetch) the tuned SparkSession.
 
-    ``cpus`` defaults to ``$SPARK_GRAFT_CPUS`` or all cores.
+    ``cpus`` defaults to ``$SPARK_GRAFT_CPUS`` or all cores, and the
+    driver heap to ``$SPARK_GRAFT_DRIVER_MEM`` or half the host's
+    physical memory.
     """
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
@@ -48,7 +61,7 @@ def get_spark(app_name: str = "flink_scala_spark", cpus: int | None = None) -> S
         .appName(app_name)
         .config(map=SQL_CONFS)
         .config("spark.sql.shuffle.partitions", str(cpus))
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", _half_memory()))
         .config("spark.ui.enabled", "false")
     )
     spark = builder.getOrCreate()

@@ -25,6 +25,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 
 from flink_scala_spark.session import scoped_conf
+from flink_scala_spark.streaming.tws import PROVIDER_CONF, ROCKSDB_PROVIDER
 
 _counter = itertools.count()
 
@@ -42,10 +43,12 @@ REPLAY_MIN_PARTITIONS = 4
 TIMEOUT_S = 600
 
 #: A query clones the session's conf when it starts and keeps its
-#: shuffle partitioning from then on, so a run's replay-sized
-#: ``spark.sql.shuffle.partitions`` is set only around ``start()``.
-#: Starts on one process are serialized, so an overlapping run never
-#: reads another run's temporary value as the one to put back.
+#: shuffle partitioning and state-store provider from then on, so a
+#: run's replay-sized ``spark.sql.shuffle.partitions`` and the RocksDB
+#: provider of a ``transformWithState`` stream are set only around
+#: ``start()``. Starts on one process are serialized, so an
+#: overlapping run never reads another run's temporary value as the
+#: one to put back.
 _START_LOCK = threading.Lock()
 
 
@@ -98,6 +101,14 @@ def _partitions(spark: SparkSession, nbytes: int) -> int | None:
     return replay_partitions(nbytes, par)
 
 
+def _transforms_with_state(stream_df: DataFrame) -> bool:
+    try:
+        plan = stream_df._jdf.queryExecution().logical().toString()
+    except Exception:
+        return False  # no JVM handle (Connect-style session)
+    return "TransformWithState" in plan
+
+
 def _run(
     stream_df: DataFrame, output_mode: str, foreach=None, available_now=False
 ) -> DataFrame | None:
@@ -110,6 +121,9 @@ def _run(
     confs = {}
     if rec.partitions is not None:
         confs["spark.sql.shuffle.partitions"] = str(rec.partitions)
+    if _transforms_with_state(stream_df):
+        # the TWS runtime keeps its state only on RocksDB
+        confs[PROVIDER_CONF] = ROCKSDB_PROVIDER
     name = f"fss_q{next(_counter)}"
     w = stream_df.writeStream.outputMode(output_mode).queryName(name)
     w = w.foreachBatch(foreach) if foreach else w.format("memory")

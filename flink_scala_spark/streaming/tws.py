@@ -21,11 +21,11 @@ the vendored 6.32 runtime is one minor version behind pyspark's 6.33
 gencode, which protobuf's own escape hatch accepts).
 
 Five driver-gate catalog entries (``streaming_*_tws``) run on this API
-through :func:`tws_session`, which unlocks the runtime in-session and
-sets the RocksDB state store provider TWS requires for the duration of
-the run; without a protobuf runtime they raise. ``stateful.py`` holds
-the ``applyInPandasWithState`` twins (e.g. ``streaming_rising_alarm``)
-of the same semantics.
+through :func:`tws_session`, which unlocks the runtime in-session; the
+bounded runner sets the RocksDB state store provider TWS requires
+around each query's start only. Without a protobuf runtime they raise.
+``stateful.py`` holds the ``applyInPandasWithState`` twins (e.g.
+``streaming_rising_alarm``) of the same semantics.
 """
 
 from __future__ import annotations
@@ -104,8 +104,8 @@ def ensure_tws_runtime(spark) -> None:
        ``StreamingPythonRunner``, which only sees env vars.)
     2. The driver side only needs ``sys.path`` + ``os.environ``, both
        process-local and mutable at any time.
-    3. The RocksDB provider is a runtime SQL conf, set per run by
-       :func:`tws_session`.
+    3. The RocksDB provider is a runtime SQL conf, set around each TWS
+       query's start by the bounded runner.
 
     The vendored protobuf lives in a directory with many other
     top-level modules, so the path handed to workers is a scratch dir
@@ -139,14 +139,12 @@ def _ensure_tws_runtime_locked(spark) -> None:
 
 @contextlib.contextmanager
 def tws_session(spark):
-    """Unlock the TWS runtime and run the ``with`` block on the RocksDB
-    state store provider; the previous provider is restored on exit,
-    also when the block raises."""
-    from flink_scala_spark.session import scoped_conf
-
+    """Unlock the TWS runtime for the ``with`` block. The RocksDB
+    provider is not set here: the bounded runner sets it around the
+    start of each TWS query only, so the session's own provider stays
+    as it was."""
     ensure_tws_runtime(spark)
-    with scoped_conf(spark, {PROVIDER_CONF: ROCKSDB_PROVIDER}):
-        yield
+    yield
 
 
 def build_rising_alarm_tws(horizon_seconds: int = 600):

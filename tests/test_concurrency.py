@@ -97,6 +97,92 @@ def test_overlapping_bounded_runs_keep_session_shuffle_conf(
     assert got == serial
 
 
+def test_overlapping_tws_runs_keep_session_state_store_provider(
+    spark, tmp_path, monkeypatch
+):
+    """Two transformWithState runs that overlap on one session leave its
+    state-store provider as it was. TWS needs the RocksDB provider, and
+    a query fixes its provider when it starts, so the runner sets it
+    only around start(). The runs are interleaved as in the shuffle-conf
+    test above: the first run waits after its query ends until the
+    second has finished its own, and the second then waits until the
+    first has returned, so the second run starts while the first is
+    still inside its builder, and finishes last."""
+    import threading
+    from datetime import datetime, timedelta
+
+    import pytest
+    from pyspark.sql.streaming.query import StreamingQuery
+    from pyspark.sql.types import (
+        DoubleType,
+        LongType,
+        StructField,
+        StructType,
+        TimestampType,
+    )
+
+    from flink_scala_spark.streaming.runner import run_bounded_now
+    from flink_scala_spark.streaming.tws import (
+        PROVIDER_CONF,
+        protobuf_pythonpath,
+        rising_alarm_tws,
+        tws_session,
+    )
+
+    if protobuf_pythonpath() is None:
+        pytest.skip("no protobuf runtime for TWS workers")
+    schema = StructType(
+        [
+            StructField("user_id", LongType()),
+            StructField("event_id", LongType()),
+            StructField("ts", TimestampType()),
+            StructField("value", DoubleType()),
+        ]
+    )
+    t0 = datetime(2024, 1, 1)
+    rows = [(1, i, t0 + timedelta(seconds=10 * i), float(i)) for i in range(4)]
+    spark.createDataFrame(rows, schema).coalesce(1).write.parquet(str(tmp_path / "ev"))
+
+    first_waiting = threading.Event()
+    second_live = threading.Event()
+    first_done = threading.Event()
+    await_termination = StreamingQuery.awaitTermination
+
+    def ordered_await(q, timeout=None):
+        out = await_termination(q, timeout)
+        if timeout == 30:  # the runner's wait after stop()
+            return out
+        if not first_waiting.is_set():
+            first_waiting.set()
+            assert second_live.wait(120), "second run never started"
+        else:
+            second_live.set()
+            assert first_done.wait(120), "first run never returned"
+        return out
+
+    def run():
+        with tws_session(spark):
+            stream = spark.readStream.schema(schema).parquet(str(tmp_path / "ev"))
+            out = run_bounded_now(rising_alarm_tws(stream, horizon_seconds=5))
+            return sorted(tuple(r) for r in out.collect())
+
+    def run_first():
+        try:
+            return run()
+        finally:
+            first_done.set()
+
+    prev = spark.conf.get(PROVIDER_CONF, None)
+    monkeypatch.setattr(StreamingQuery, "awaitTermination", ordered_await)
+    with ThreadPoolExecutor(max_workers=2) as pool:
+        f1 = pool.submit(run_first)
+        assert first_waiting.wait(120) or f1.done(), "first run never started"
+        f2 = pool.submit(run)
+        got = [f1.result(timeout=600), f2.result(timeout=600)]
+    assert spark.conf.get(PROVIDER_CONF, None) == prev
+    assert got[0] == got[1]
+
+
 def test_worker_package_import_from_foreign_cwd(tmp_path, sf_dir):
     """The driver harness may run from ANY cwd with only its own
     sys.path patched; Python workers un-pickle module-level stateful

@@ -432,10 +432,10 @@ def test_blocked_near_dup_matches_broadcast_baseline(spark):
     assert max(per_tile.values()) <= 2 * tile_rows
 
 
-def test_ivf_centroids_fixed_size_and_paths_agree(spark):
+def test_ivf_centroids_fixed_size(spark):
     """The IVF coarse quantizer must be capped at NUM_CENTROIDS rows
-    regardless of corpus size, and the codegen and Arrow paths must
-    produce identical neighbor lists."""
+    regardless of corpus size (the ann_ivf_topk oracle pins the
+    neighbor lists it produces)."""
     from flink_scala_spark.pipeline import similarity
 
     emb = (
@@ -449,17 +449,6 @@ def test_ivf_centroids_fixed_size_and_paths_agree(spark):
         emb.select((F.col("vec_id") + 1_000_000).alias("vec_id"), "embedding")
     )
     assert len(similarity.centroid_rows(doubled).collect()) == similarity.NUM_CENTROIDS
-
-    pred = F.col("vec_id") % 100 == 0
-    a = {
-        (r["query_id"], r["rank"]): (r["neighbor_id"], r["cosine"])
-        for r in similarity.ivf_topk(emb, pred, k=3, nprobe=2).collect()
-    }
-    b = {
-        (r["query_id"], r["rank"]): (r["neighbor_id"], r["cosine"])
-        for r in similarity.ivf_topk_vectorized(emb, pred, k=3, nprobe=2).collect()
-    }
-    assert a == b
 
 
 def test_label_masked_topk_respects_label_relation(spark):

@@ -79,3 +79,14 @@ def test_serving_collect_is_bounded(spark, sf_dir, monkeypatch):
     monkeypatch.setattr(streaming_queries, "MAX_SERVE_BATCH_ROWS", 0)
     with pytest.raises(Exception, match="streaming_ann_pq_serving: a serving microbatch"):
         QUERIES["streaming_ann_pq_serving"].fn(spark, sf_dir)
+
+
+def test_ivf_query_collect_is_bounded(spark, sf_dir, monkeypatch):
+    """ivf_topk_vectorized collects its query side to the driver; past
+    MAX_REFERENCE_ROWS (read at call time) it must refuse, naming the
+    executing entry, after collecting at most bound+1 rows."""
+    monkeypatch.setattr(guards, "MAX_REFERENCE_ROWS", 1)
+    with pytest.raises(
+        RuntimeError, match="ann_ivf_topk: the reference side has at least 2 rows"
+    ):
+        QUERIES["ann_ivf_topk"].fn(spark, sf_dir)
