@@ -7,6 +7,4 @@ from flink_scala_spark.functions.portable import (  # noqa: F401
     duck_h60,
     h60,
     inorder_dot,
-    inorder_dot_fixed,
-    inorder_dot_literal,
 )

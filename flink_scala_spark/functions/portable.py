@@ -57,29 +57,6 @@ def inorder_dot(a: Column, b: Column) -> Column:
     return F.aggregate(prods, F.lit(0.0), lambda acc, v: acc + v)
 
 
-def inorder_dot_fixed(a: Column, b: Column, dim: int) -> Column:
-    """Unrolled fixed-dimension variant of :func:`inorder_dot`.
-
-    Emits an explicit left-associated 0.0 + a[1]*b[1] + ... + a[d]*b[d]
-    expression: identical IEEE result to the fold, but it stays inside
-    whole-stage codegen (higher-order-function lambdas are interpreted
-    in Spark — ~20x slower per row on 2M-pair joins).
-    """
-    expr: Column = F.lit(0.0)
-    for i in range(1, dim + 1):
-        expr = expr + F.element_at(a, i).cast("double") * F.element_at(b, i).cast("double")
-    return expr
-
-
-def inorder_dot_literal(vec: Column, consts: list[float]) -> Column:
-    """Unrolled dot of an array column against Python float constants
-    (hyperplane projections); same in-order semantics."""
-    expr: Column = F.lit(0.0)
-    for i, c in enumerate(consts, start=1):
-        expr = expr + F.element_at(vec, i).cast("double") * F.lit(float(c))
-    return expr
-
-
 def duck_dot(a: str, b: str) -> str:
     """DuckDB twin of :func:`inorder_dot` over list columns ``a``/``b``.
 

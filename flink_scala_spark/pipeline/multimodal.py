@@ -2,9 +2,8 @@
 metadata, decoded / feature-extracted via Arrow-batched mapInPandas.
 
 The image/audio codec libraries are not in this container, so the
-actual decode is stubbed (``decode_image`` raises NotImplementedError
-unless pillow appears) — but the Spark-side plumbing is real and
-tested: binary column + metadata struct schema, Arrow batch transfer,
+real decode path (``extract_features(decoder='real')``) needs pillow
+— but the Spark-side plumbing is real and tested: binary column + metadata struct schema, Arrow batch transfer,
 mapInPandas feature extraction with a deterministic fake decoder whose
 output the DuckDB oracle reproduces exactly.
 
@@ -53,20 +52,6 @@ FEATURES_SCHEMA = StructType(
         StructField("height", IntegerType()),
     ]
 )
-
-
-def decode_image(payload: bytes):
-    """Real decode path — stubbed: pillow is not in this container."""
-    try:
-        from PIL import Image  # noqa: F401
-        import io
-
-        return Image.open(io.BytesIO(payload))
-    except ImportError as e:  # pragma: no cover - container has no PIL
-        raise NotImplementedError(
-            "image decode requires pillow; this container tests the Spark "
-            "plumbing with extract_features' deterministic fake decoder"
-        ) from e
 
 
 def sample_frames(assets: DataFrame, every_n: int = 7) -> DataFrame:

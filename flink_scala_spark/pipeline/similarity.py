@@ -377,78 +377,6 @@ def cosine_topk_vectorized(
     )
 
 
-def _baseline_near_dup_pairs_vectorized(
-    emb: DataFrame,
-    threshold: float,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int = DIM,
-) -> DataFrame:
-    """Brute-force all-pairs cosine, Arrow+numpy path: the TEST-ONLY
-    exact baseline, bit-identical to the DuckDB oracle's in-order fold.
-
-    One side is broadcast as a dense float64 matrix (same must-fit
-    memory contract as the broadcast join); the streamed side crosses
-    the Python boundary once per Arrow batch and scores a whole
-    (batch x broadcast) block per dimension step. Exactness: the
-    accumulator adds the k-th elementwise product in dimension order,
-    so every pair's dot is the same IEEE-754 sequence
-    0.0 + a1*b1 + ... + aD*bD as the codegen/DuckDB fold; float32
-    inputs widen exactly; division and sqrt are correctly rounded in
-    both engines. The DuckDB oracle is unchanged.
-
-    Scale bound: the WHOLE corpus is collected to the driver and
-    broadcast as one dense matrix — a small-scale exact baseline only.
-    The production path is :func:`near_dup_pairs_blocked`, which never
-    collects vector data.
-    """
-    import numpy as np
-
-    pdf = emb.select(id_col, vec_col).toPandas()
-    b_ids = pdf[id_col].to_numpy(dtype="int64")
-    B = np.stack([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
-    b_nsq = np.zeros(len(B))
-    for k in range(dim):
-        b_nsq += B[:, k] * B[:, k]
-    sc = emb.sparkSession.sparkContext
-    bc = sc.broadcast((b_ids, B, b_nsq))
-    thr = float(threshold)
-    d = int(dim)
-
-    def fn(batches):
-        import numpy as _np
-        import pandas as _pd
-
-        ids_b, mat_b, nsq_b = bc.value
-        for block in batches:
-            if len(block) == 0:
-                continue
-            a_ids = block[id_col].to_numpy(dtype="int64")
-            A = _np.stack(
-                [_np.asarray(v, dtype=_np.float64) for v in block[vec_col]]
-            )
-            acc = _np.zeros((len(A), len(mat_b)))
-            for k in range(d):
-                acc += _np.outer(A[:, k], mat_b[:, k])
-            a_nsq = _np.zeros(len(A))
-            for k in range(d):
-                a_nsq += A[:, k] * A[:, k]
-            cos = acc / _np.sqrt(_np.outer(a_nsq, nsq_b))
-            ii, jj = _np.nonzero(
-                (cos >= thr) & (a_ids[:, None] < ids_b[None, :])
-            )
-            yield _pd.DataFrame(
-                {
-                    "vec_a": a_ids[ii],
-                    "vec_b": ids_b[jj],
-                    "cosine": cos[ii, jj],
-                }
-            )
-
-    out = spread(emb.select(id_col, vec_col))
-    return out.mapInPandas(fn, "vec_a long, vec_b long, cosine double")
-
-
 def near_dup_pairs_blocked(
     emb: DataFrame,
     threshold: float,
@@ -458,8 +386,9 @@ def near_dup_pairs_blocked(
     max_tile_rows: int = 100_000,
 ) -> DataFrame:
     """Exact all-pairs cosine as a distributed block nested loop —
-    bit-identical to :func:`_baseline_near_dup_pairs_vectorized` with NO driver
-    collect and NO full-corpus broadcast.
+    bit-identical to the broadcast all-pairs baseline of
+    ``tests/test_curation_ops.py`` with NO driver collect and NO
+    full-corpus broadcast.
 
     Vectors are hash-tiled (``pmod(vec_id, T)``, T sized so a tile
     holds <= ``max_tile_rows`` rows); every unordered tile pair
@@ -1131,8 +1060,8 @@ def lsh_near_dup_pairs_vectorized(
 
     Stage 2 (``groupBy(bucket).applyInPandas``): ONE shuffle keyed by
     bucket; inside each bucket the n_b^2 cosine block is accumulated
-    per-dimension (same in-order trick as
-    :func:`_baseline_near_dup_pairs_vectorized`), pairs ``i < j`` above threshold
+    per-dimension (same in-order trick as the broadcast baseline of
+    ``tests/test_curation_ops.py``), pairs ``i < j`` above threshold
     emitted. The pair space never exists JVM-side.
 
     Scale: at 100 TB, widen NUM_PLANES so 2^planes keeps each bucket's

@@ -95,10 +95,6 @@ ROLLING_UD_SQL = """
 """
 
 
-def query_map() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return {name: spec.fn for name, spec in QUERIES.items()}
-
-
 def oracle_sql_map() -> dict[str, str]:
     return {name: spec.oracle for name, spec in QUERIES.items() if spec.oracle is not None}
 

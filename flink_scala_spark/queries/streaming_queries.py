@@ -1356,20 +1356,17 @@ def q_streaming_rising_alarm_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``transformWithStateInPandas`` + RocksDB on the events table,
     replayed as ~7 time-ordered microbatches so the watermark
     actually climbs and fires timers mid-stream. The protobuf runtime
-    the TWS worker needs is unlocked in-session
-    (streaming/tws.py:tws_session), so this runs on the
+    the TWS worker needs is unlocked in-session by the stream
+    constructor (streaming/tws.py:_by_user), so this runs on the
     driver's own vanilla SparkSession; the DuckDB oracle replays the
     measured watermark/timer semantics exactly (see _TWS_ALARM_ORACLE).
     The `applyInPandasWithState` twin is `streaming_rising_alarm`."""
     from flink_scala_spark.streaming.runner import run_bounded_now
-    from flink_scala_spark.streaming.tws import rising_alarm_tws, tws_session
+    from flink_scala_spark.streaming.tws import rising_alarm_tws
 
-    with tws_session(spark):
-        src = sources.file_replay_time_buckets(
-            spark, sf_dir, "events", _TWS_BUCKET_S
-        )
-        alarms = rising_alarm_tws(src, horizon_seconds=_TWS_HORIZON_S)
-        return run_bounded_now(alarms, "append")
+    src = sources.file_replay_time_buckets(spark, sf_dir, "events", _TWS_BUCKET_S)
+    alarms = rising_alarm_tws(src, horizon_seconds=_TWS_HORIZON_S)
+    return run_bounded_now(alarms, "append")
 
 
 # The running-summary processor emits one row per (key, batch-with-
@@ -1426,16 +1423,10 @@ def q_streaming_session_summary_tws(spark: SparkSession, sf_dir: str) -> DataFra
     time-bucketed microbatches for the end-state row (max_by n_events)
     to equal the whole-table aggregate the oracle computes."""
     from flink_scala_spark.streaming.runner import run_bounded_now
-    from flink_scala_spark.streaming.tws import (
-        session_summary_tws,
-        tws_session,
-    )
+    from flink_scala_spark.streaming.tws import session_summary_tws
 
-    with tws_session(spark):
-        src = sources.file_replay_time_buckets(
-            spark, sf_dir, "events", _TWS_BUCKET_S
-        )
-        out = run_bounded_now(session_summary_tws(src), "update")
+    src = sources.file_replay_time_buckets(spark, sf_dir, "events", _TWS_BUCKET_S)
+    out = run_bounded_now(session_summary_tws(src), "update")
     final = out.groupBy("user_id").agg(
         F.expr(
             "max_by(struct(n_events, n_types, max_type_cnt, last3_cents), n_events)"
@@ -1537,13 +1528,10 @@ def q_streaming_session_gap_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
     `streaming_session_windows`. Oracle: the measured bucket/watermark
     model (see _TWS_SESSION_ORACLE)."""
     from flink_scala_spark.streaming.runner import run_bounded_now
-    from flink_scala_spark.streaming.tws import session_gap_tws, tws_session
+    from flink_scala_spark.streaming.tws import session_gap_tws
 
-    with tws_session(spark):
-        src = sources.file_replay_time_buckets(
-            spark, sf_dir, "events", _TWS_BUCKET_S
-        )
-        return run_bounded_now(session_gap_tws(src, _TWS_GAP_S), "append")
+    src = sources.file_replay_time_buckets(spark, sf_dir, "events", _TWS_BUCKET_S)
+    return run_bounded_now(session_gap_tws(src, _TWS_GAP_S), "append")
 
 
 # ---------------------------------------------------------------------------
@@ -1644,36 +1632,32 @@ def q_streaming_two_stream_reconcile_tws(
     microbatches so both state kinds and the timers genuinely cross
     batch boundaries."""
     from flink_scala_spark.streaming.runner import run_bounded_now
-    from flink_scala_spark.streaming.tws import (
-        two_stream_reconcile_tws,
-        tws_session,
-    )
+    from flink_scala_spark.streaming.tws import two_stream_reconcile_tws
 
-    with tws_session(spark):
-        # ONE replay source, tagged in-stream (round-11 review pass 3:
-        # the previous two-source unionByName read every bucket file
-        # twice per microbatch — 2x source I/O for an identical tagged
-        # stream). The union sat BEFORE the watermark, so the single
-        # filtered stream has the same watermark basis: max event time
-        # over purchase ∪ click rows. Clicks carry a NULL value, as
-        # unionByName(allowMissingColumns) produced.
-        is_order = F.col("event_type") == "purchase"
-        tagged = (
-            sources.file_replay_time_buckets(spark, sf_dir, "events", _TWS_BUCKET_S)
-            .where(F.col("event_type").isin("purchase", "click"))
-            .select(
-                "user_id",
-                "event_id",
-                "ts",
-                F.when(is_order, F.col("value")).alias("value"),
-                F.when(is_order, F.lit("order"))
-                .otherwise(F.lit("pay"))
-                .alias("side"),
-            )
+    # ONE replay source, tagged in-stream (round-11 review pass 3:
+    # the previous two-source unionByName read every bucket file
+    # twice per microbatch — 2x source I/O for an identical tagged
+    # stream). The union sat BEFORE the watermark, so the single
+    # filtered stream has the same watermark basis: max event time
+    # over purchase ∪ click rows. Clicks carry a NULL value, as
+    # unionByName(allowMissingColumns) produced.
+    is_order = F.col("event_type") == "purchase"
+    tagged = (
+        sources.file_replay_time_buckets(spark, sf_dir, "events", _TWS_BUCKET_S)
+        .where(F.col("event_type").isin("purchase", "click"))
+        .select(
+            "user_id",
+            "event_id",
+            "ts",
+            F.when(is_order, F.col("value")).alias("value"),
+            F.when(is_order, F.lit("order"))
+            .otherwise(F.lit("pay"))
+            .alias("side"),
         )
-        return run_bounded_now(
-            two_stream_reconcile_tws(tagged, _TWS_RECONCILE_GAP_S), "append"
-        )
+    )
+    return run_bounded_now(
+        two_stream_reconcile_tws(tagged, _TWS_RECONCILE_GAP_S), "append"
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -1771,16 +1755,13 @@ def q_streaming_trigger_fire_purge(spark: SparkSession, sf_dir: str) -> DataFram
     streaming form with real purge-on-fire state. Oracle: the measured
     timer/watermark model (_FIRE_PURGE_ORACLE)."""
     from flink_scala_spark.streaming.runner import run_bounded_now
-    from flink_scala_spark.streaming.tws import fire_purge_tws, tws_session
+    from flink_scala_spark.streaming.tws import fire_purge_tws
 
-    with tws_session(spark):
-        src = sources.file_replay_time_buckets(
-            spark, sf_dir, "events", _FP_BUCKET_S
-        )
-        return run_bounded_now(
-            fire_purge_tws(src, _FP_WINDOW_S, _FP_COUNT, _FP_EVICT_BELOW),
-            "append",
-        )
+    src = sources.file_replay_time_buckets(spark, sf_dir, "events", _FP_BUCKET_S)
+    return run_bounded_now(
+        fire_purge_tws(src, _FP_WINDOW_S, _FP_COUNT, _FP_EVICT_BELOW),
+        "append",
+    )
 
 
 # ---------------------------------------------------------------------------

@@ -14,23 +14,25 @@ wall-clock timer; SURVEY.md §7.4).
 Runtime gate: the TWS Python worker needs the protobuf runtime
 (``StateMessage_pb2``), which is not pip-installed here. The sandbox
 ships a public protobuf runtime vendored inside the Google Cloud SDK;
-:func:`protobuf_pythonpath` locates it so callers can expose it to the
-driver AND worker processes via ``PYTHONPATH`` **before** the JVM
-starts (plus ``TEMPORARILY_DISABLE_PROTOBUF_VERSION_CHECK=true`` —
+:func:`protobuf_pythonpath` locates it and :func:`ensure_tws_runtime`
+exposes it to the driver and the workers of an already-running
+session (plus ``TEMPORARILY_DISABLE_PROTOBUF_VERSION_CHECK=true`` —
 the vendored 6.32 runtime is one minor version behind pyspark's 6.33
 gencode, which protobuf's own escape hatch accepts).
 
-Five driver-gate catalog entries (``streaming_*_tws``) run on this API
-through :func:`tws_session`, which unlocks the runtime in-session; the
-bounded runner sets the RocksDB state store provider TWS requires
-around each query's start only. Without a protobuf runtime they raise.
-``stateful.py`` holds the ``applyInPandasWithState`` twins (e.g.
-``streaming_rising_alarm``) of the same semantics.
+The runtime is unlocked in-session by the stream constructors below:
+each builds its operator through :func:`_by_user`, the one
+``transformWithStateInPandas`` call, which unlocks the stream's
+session first. Five driver-gate catalog entries (``streaming_*_tws``)
+run on this API; the bounded runner sets the RocksDB state store
+provider TWS requires around each query's start only. Without a
+protobuf runtime the constructors raise. ``stateful.py`` holds the
+``applyInPandasWithState`` twins (e.g. ``streaming_rising_alarm``) of
+the same semantics.
 """
 
 from __future__ import annotations
 
-import contextlib
 import os
 import sys
 import tempfile
@@ -55,9 +57,9 @@ def protobuf_pythonpath() -> str | None:
     The vendor paths are probed FIRST: after
     :func:`ensure_tws_runtime` has run in this process,
     ``google.protobuf`` imports via a process-local ``sys.path``
-    entry that subprocesses do NOT inherit — returning '' then would
-    hand child processes (the pytest subprocess harness) an empty
-    PYTHONPATH and break their workers."""
+    entry that the workers do NOT see — returning '' then would leave
+    a restarted SparkContext in the same process (a fresh
+    ``sc.environment``) without the path, and break its workers."""
     for p in PROTOBUF_VENDOR_PATHS:
         if os.path.isfile(os.path.join(p, "google", "protobuf", "__init__.py")):
             return p
@@ -67,15 +69,6 @@ def protobuf_pythonpath() -> str | None:
         return ""
     except ImportError:
         return None
-
-
-def tws_env(path: str) -> dict[str, str]:
-    """Environment additions that make TWS workers import protobuf."""
-    env = {"TEMPORARILY_DISABLE_PROTOBUF_VERSION_CHECK": "true"}
-    if path:
-        prev = os.environ.get("PYTHONPATH", "")
-        env["PYTHONPATH"] = f"{path}:{prev}" if prev else path
-    return env
 
 
 #: applicationIds whose SparkContext.environment already carries the
@@ -91,15 +84,17 @@ def ensure_tws_runtime(spark) -> None:
     """Unlock the TWS Python workers ON AN ARBITRARY (vanilla) session,
     after the JVM has already started — the driver-gate path.
 
-    Launching with ``PYTHONPATH``/env prepared up front (``tws_env``)
-    remains the clean route for fresh processes, but the correctness
-    driver hands us an already-running session. Three measured facts
-    make the in-session unlock possible anyway:
+    The correctness driver hands us an already-running session, so the
+    environment cannot be prepared before the JVM starts. Three
+    measured facts make the in-session unlock possible anyway:
 
-    1. ``sc.environment`` mutations propagate to Python workers spawned
-       AFTER the mutation (each worker request carries the dict), so
-       ``PYTHONPATH`` + the protobuf version-check escape hatch reach
-       the TWS state-server worker without restarting the JVM.
+    1. A Python UDF copies ``sc.environment`` when it is CREATED, and
+       its workers get that copy, so ``PYTHONPATH`` + the protobuf
+       version-check escape hatch reach the TWS state-server worker of
+       every UDF created after the mutation, without restarting the
+       JVM. A UDF created before it keeps the old environment and its
+       worker fails to import protobuf — hence :func:`_by_user`
+       unlocks before it creates the UDF.
        (``sc.addPyFile`` does NOT reach that worker — it is launched by
        ``StreamingPythonRunner``, which only sees env vars.)
     2. The driver side only needs ``sys.path`` + ``os.environ``, both
@@ -137,14 +132,18 @@ def _ensure_tws_runtime_locked(spark) -> None:
         )
 
 
-@contextlib.contextmanager
-def tws_session(spark):
-    """Unlock the TWS runtime for the ``with`` block. The RocksDB
-    provider is not set here: the bounded runner sets it around the
-    start of each TWS query only, so the session's own provider stays
-    as it was."""
-    ensure_tws_runtime(spark)
-    yield
+def _by_user(stream, processor, out_schema, output_mode: str, time_mode: str):
+    """Key ``stream`` by user_id and run ``processor`` on it: the one
+    ``transformWithStateInPandas`` call. The runtime is unlocked on the
+    stream's session first, because the UDF this creates keeps the
+    environment of the moment it is created."""
+    ensure_tws_runtime(stream.sparkSession)
+    return stream.groupBy("user_id").transformWithStateInPandas(
+        processor,
+        outputStructType=out_schema,
+        outputMode=output_mode,
+        timeMode=time_mode,
+    )
 
 
 def build_rising_alarm_tws(horizon_seconds: int = 600):
@@ -342,16 +341,11 @@ def build_session_summary_tws():
 def session_summary_tws(events_stream):
     """Streaming DataFrame -> running per-user summary stream (update
     mode). Input carries (user_id, event_id, event_type, value)."""
-    proc, out_schema = build_session_summary_tws()
-    return (
-        events_stream.select("user_id", "event_id", "event_type", "value")
-        .groupBy("user_id")
-        .transformWithStateInPandas(
-            proc,
-            outputStructType=out_schema,
-            outputMode="Update",
-            timeMode="None",
-        )
+    return _by_user(
+        events_stream.select("user_id", "event_id", "event_type", "value"),
+        *build_session_summary_tws(),
+        "Update",
+        "None",
     )
 
 
@@ -452,15 +446,11 @@ def session_gap_tws(events_stream, gap_seconds: int):
     (user_id, event_id, ts TIMESTAMP, value)."""
     from flink_scala_spark.functions.portable import epoch_seconds
 
-    proc, out_schema = build_session_gap_tws(gap_seconds)
     withts = events_stream.select(
         "user_id", "event_id", epoch_seconds("ts").alias("ts_l"), "value", "ts"
     ).withWatermark("ts", "1 second")
-    return withts.groupBy("user_id").transformWithStateInPandas(
-        proc,
-        outputStructType=out_schema,
-        outputMode="Append",
-        timeMode="EventTime",
+    return _by_user(
+        withts, *build_session_gap_tws(gap_seconds), "Append", "EventTime"
     )
 
 
@@ -600,7 +590,6 @@ def fire_purge_tws(events_stream, window_seconds: int, fire_count: int,
 
     from flink_scala_spark.functions.portable import epoch_seconds
 
-    proc, out_schema = build_fire_purge_tws(window_seconds, fire_count)
     withts = (
         events_stream.where(F.col("value") >= evict_below)
         .select(
@@ -608,11 +597,11 @@ def fire_purge_tws(events_stream, window_seconds: int, fire_count: int,
         )
         .withWatermark("ts", "1 second")
     )
-    return withts.groupBy("user_id").transformWithStateInPandas(
-        proc,
-        outputStructType=out_schema,
-        outputMode="Append",
-        timeMode="EventTime",
+    return _by_user(
+        withts,
+        *build_fire_purge_tws(window_seconds, fire_count),
+        "Append",
+        "EventTime",
     )
 
 
@@ -623,15 +612,11 @@ def rising_alarm_tws(events_stream, horizon_seconds: int = 600):
     watermark on ts (event-time timers fire off the watermark)."""
     from flink_scala_spark.functions.portable import epoch_seconds
 
-    proc, out_schema = build_rising_alarm_tws(horizon_seconds)
     withts = events_stream.select(
         "user_id", "event_id", epoch_seconds("ts").alias("ts_l"), "value", "ts"
     ).withWatermark("ts", "1 second")
-    return withts.groupBy("user_id").transformWithStateInPandas(
-        proc,
-        outputStructType=out_schema,
-        outputMode="Append",
-        timeMode="EventTime",
+    return _by_user(
+        withts, *build_rising_alarm_tws(horizon_seconds), "Append", "EventTime"
     )
 
 
@@ -823,7 +808,6 @@ def two_stream_reconcile_tws(tagged_stream, gap_seconds: int):
     must already ride ``ts`` so event-time gap timers fire."""
     from flink_scala_spark.functions.portable import epoch_seconds
 
-    proc, out_schema = build_two_stream_reconcile_tws(gap_seconds)
     withts = tagged_stream.select(
         "user_id",
         "event_id",
@@ -832,11 +816,11 @@ def two_stream_reconcile_tws(tagged_stream, gap_seconds: int):
         "side",
         "ts",
     ).withWatermark("ts", "1 second")
-    return withts.groupBy("user_id").transformWithStateInPandas(
-        proc,
-        outputStructType=out_schema,
-        outputMode="Append",
-        timeMode="EventTime",
+    return _by_user(
+        withts,
+        *build_two_stream_reconcile_tws(gap_seconds),
+        "Append",
+        "EventTime",
     )
 
 
@@ -955,13 +939,12 @@ def rising_alarm_ptime_tws(events_stream, hold_seconds: int = 10):
     (user_id, event_id, ts TIMESTAMP, value)."""
     from flink_scala_spark.functions.portable import epoch_seconds
 
-    proc, out_schema = build_rising_alarm_ptime_tws(hold_seconds)
     withts = events_stream.select(
         "user_id", "event_id", epoch_seconds("ts").alias("ts_l"), "value"
     )
-    return withts.groupBy("user_id").transformWithStateInPandas(
-        proc,
-        outputStructType=out_schema,
-        outputMode="Append",
-        timeMode="ProcessingTime",
+    return _by_user(
+        withts,
+        *build_rising_alarm_ptime_tws(hold_seconds),
+        "Append",
+        "ProcessingTime",
     )

@@ -126,7 +126,6 @@ def test_overlapping_tws_runs_keep_session_state_store_provider(
         PROVIDER_CONF,
         protobuf_pythonpath,
         rising_alarm_tws,
-        tws_session,
     )
 
     if protobuf_pythonpath() is None:
@@ -161,10 +160,9 @@ def test_overlapping_tws_runs_keep_session_state_store_provider(
         return out
 
     def run():
-        with tws_session(spark):
-            stream = spark.readStream.schema(schema).parquet(str(tmp_path / "ev"))
-            out = run_bounded_now(rising_alarm_tws(stream, horizon_seconds=5))
-            return sorted(tuple(r) for r in out.collect())
+        stream = spark.readStream.schema(schema).parquet(str(tmp_path / "ev"))
+        out = run_bounded_now(rising_alarm_tws(stream, horizon_seconds=5))
+        return sorted(tuple(r) for r in out.collect())
 
     def run_first():
         try:

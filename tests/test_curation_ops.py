@@ -14,6 +14,60 @@ def _docs(spark, rows):
     return spark.createDataFrame(rows, "doc_id long, text string")
 
 
+def _broadcast_near_dup_baseline(emb, threshold: float):
+    """Brute-force all-pairs cosine over (vec_id, embedding): the exact
+    baseline, bit-identical to the DuckDB oracle's in-order fold.
+
+    One side is broadcast as a dense float64 matrix; the streamed side
+    scores a whole (Arrow batch x broadcast) block per dimension step,
+    adding the k-th elementwise product in dimension order, so every
+    pair's dot is the same IEEE-754 sequence 0.0 + a1*b1 + ... + aD*bD
+    as the codegen/DuckDB fold. The whole corpus is collected to the
+    driver, so this is a small-scale test baseline only."""
+    import numpy as np
+
+    from flink_scala_spark.pipeline.similarity import DIM
+    from flink_scala_spark.tables import spread
+
+    pdf = emb.select("vec_id", "embedding").toPandas()
+    b_ids = pdf["vec_id"].to_numpy(dtype="int64")
+    B = np.stack([np.asarray(v, dtype=np.float64) for v in pdf["embedding"]])
+    b_nsq = np.zeros(len(B))
+    for k in range(DIM):
+        b_nsq += B[:, k] * B[:, k]
+    bc = emb.sparkSession.sparkContext.broadcast((b_ids, B, b_nsq))
+    thr = float(threshold)
+
+    def fn(batches):
+        import numpy as _np
+        import pandas as _pd
+
+        ids_b, mat_b, nsq_b = bc.value
+        for block in batches:
+            if len(block) == 0:
+                continue
+            a_ids = block["vec_id"].to_numpy(dtype="int64")
+            A = _np.stack(
+                [_np.asarray(v, dtype=_np.float64) for v in block["embedding"]]
+            )
+            acc = _np.zeros((len(A), len(mat_b)))
+            for k in range(DIM):
+                acc += _np.outer(A[:, k], mat_b[:, k])
+            a_nsq = _np.zeros(len(A))
+            for k in range(DIM):
+                a_nsq += A[:, k] * A[:, k]
+            cos = acc / _np.sqrt(_np.outer(a_nsq, nsq_b))
+            ii, jj = _np.nonzero(
+                (cos >= thr) & (a_ids[:, None] < ids_b[None, :])
+            )
+            yield _pd.DataFrame(
+                {"vec_a": a_ids[ii], "vec_b": ids_b[jj], "cosine": cos[ii, jj]}
+            )
+
+    out = spread(emb.select("vec_id", "embedding"))
+    return out.mapInPandas(fn, "vec_a long, vec_b long, cosine double")
+
+
 def test_repetition_stats_known_values(spark):
     docs = _docs(
         spark,
@@ -406,7 +460,7 @@ def test_blocked_near_dup_matches_broadcast_baseline(spark):
     tile_rows = max(1, n // 4)  # force >= 4 tiles -> >= 10 groups
     base = {
         (r["vec_a"], r["vec_b"]): r["cosine"]
-        for r in similarity._baseline_near_dup_pairs_vectorized(emb, threshold=0.4).collect()
+        for r in _broadcast_near_dup_baseline(emb, threshold=0.4).collect()
     }
     blocked = {
         (r["vec_a"], r["vec_b"]): r["cosine"]

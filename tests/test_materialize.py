@@ -5,6 +5,8 @@ WHERE bytes live but never the rows."""
 
 from __future__ import annotations
 
+import ast
+import glob
 import os
 import re
 
@@ -54,6 +56,74 @@ def test_raw_materialize_lint_pattern():
     for ok in ("loop_checkpoint(df)", "df.transform(loop_checkpoint_lazy)",
                "spark.sparkContext.setCheckpointDir(d)"):
         assert not RAW_MATERIALIZE.search(ok), ok
+
+
+REPO = os.path.join(os.path.dirname(__file__), "..")
+
+#: Top-level engine functions that no non-test code calls, kept on
+#: purpose; the reason says who the caller is.
+UNREACHED_OK = {
+    "console_sink": "reference sink K1 (WindowTest.scala:76-79), for user programs",
+    "kafka_sink": "reference sink K2 (KafkaSinkTest.scala:39-44), for user programs",
+    "client_foreach_sink": "reference sinks K3/K4 (Redis/ES per-partition client)",
+    "kafka_topic": "reference source S5 (Kafka), for user programs",
+    "socket_lines": "reference source S3 (StreamWordCount.scala:25)",
+    "rising_alarm_ptime_tws": "the reference's literal wall-clock alarm "
+    "(ProcessAlarmTest.scala:90-100); the catalog runs the event-time twin",
+    "export_training_corpus": "export.py API, for user programs",
+    "export_versioned": "export.py API, for user programs",
+    "read_snapshot": "export.py API, for user programs",
+    "vacuum_exports": "export.py API, for user programs",
+    "read_committed": "jsonl_sink's manifest-honoring reader, for user programs",
+    "order_row": "the reference order model the generator tests compare against",
+    "register_views": "SQL API path: every table as a temp view",
+    "real_decode_available": "pre-flight probe for extract_features(decoder='real')",
+}
+
+
+def _non_test_sources() -> list[str]:
+    """The engine itself, the benches, the driver entry, tools/ and
+    perfbench/."""
+    pats = ("flink_scala_spark/**/*.py", "bench*.py", "__spark_entry__.py",
+            "tools/**/*.py", "perfbench/**/*.py")
+    return sorted(
+        p for pat in pats for p in glob.glob(os.path.join(REPO, pat), recursive=True)
+    )
+
+
+def test_every_engine_def_is_reachable():
+    """Every top-level, undecorated engine function is referenced (as a
+    name or an attribute) from non-test code outside its own body, or
+    is on UNREACHED_OK. Docstrings are strings, so a mention there does
+    not count; f-string expressions are parsed, so a call there does."""
+    engine = os.path.abspath(ENGINE_ROOT)
+    defs: dict[str, str] = {}
+    refs: set[str] = set()
+    for path in _non_test_sources():
+        tree = ast.parse(open(path).read(), path)
+        for top in tree.body:
+            own = None
+            if (
+                os.path.abspath(path).startswith(engine)
+                and isinstance(top, (ast.FunctionDef, ast.AsyncFunctionDef))
+                and not top.decorator_list
+            ):
+                own = top.name
+                defs[own] = f"{os.path.relpath(path, REPO)}:{top.lineno}"
+            for node in ast.walk(top):
+                if isinstance(node, ast.Name):
+                    name = node.id
+                elif isinstance(node, ast.Attribute):
+                    name = node.attr
+                else:
+                    continue
+                if name != own:
+                    refs.add(name)
+    unreached = {n: where for n, where in defs.items() if n not in refs}
+    offenders = {n: where for n, where in unreached.items() if n not in UNREACHED_OK}
+    assert not offenders, offenders
+    # an allowlist entry whose def became reachable or was deleted goes
+    assert sorted(set(UNREACHED_OK) - set(unreached)) == []
 
 
 def test_shared_bounded_persist_mode_same_rows(spark, sf_dir, monkeypatch):

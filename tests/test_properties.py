@@ -72,9 +72,6 @@ def test_inorder_dot_matches_duckdb(spark, ab):
     got = df.select(
         portable.inorder_dot(F.col("a"), F.col("b")).alias("d")
     ).collect()[0].d
-    got_fixed = df.select(
-        portable.inorder_dot_fixed(F.col("a"), F.col("b"), len(a)).alias("d")
-    ).collect()[0].d
     con = duckdb.connect()
     want = con.execute(
         f"SELECT {portable.duck_dot('a', 'b')} FROM "
@@ -82,7 +79,7 @@ def test_inorder_dot_matches_duckdb(spark, ab):
         [a, b],
     ).fetchone()[0]
     # bit-exact: the folds share one evaluation order
-    assert got == want == got_fixed
+    assert got == want
 
 
 events = st.lists(

@@ -72,19 +72,6 @@ def test_client_sink_requires_factory():
         client_foreach_sink(lambda client, rows: None, client_factory=None)
 
 
-def test_multimodal_decode_stub():
-    from flink_scala_spark.pipeline.multimodal import decode_image
-
-    try:
-        import PIL  # noqa: F401
-
-        pytest.skip("pillow present; decode path live")
-    except ImportError:
-        pass
-    with pytest.raises(NotImplementedError):
-        decode_image(b"\x89PNG\r\n")
-
-
 def test_jsonl_datasource_batch_write_commits_manifest(spark, tmp_path):
     from flink_scala_spark.streaming import jsonl_sink
 
